@@ -19,7 +19,9 @@ object ReconciliationCheck {
 
   /** Distributed `wc -l` (S7): one Spark job over all files, counting
     * lines per file — `spark.read.text` is splittable, so this scales to
-    * arbitrarily large CSVs without a driver loop. */
+    * arbitrarily large CSVs without a driver loop. The standalone counter
+    * (`cli.CsvCount --fast`) uses it; the pipeline folds the same count
+    * into `fusedCounts`. */
   def csvLineCounts(spark: SparkSession, files: Seq[Path]): Map[String, Long] = {
     if (files.isEmpty) return Map.empty
     spark.read.textFile(files.map(_.toString): _*)
@@ -28,6 +30,46 @@ object ReconciliationCheck {
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
+  }
+
+  /** Raw line counts per CSV file (keyed like `csvLineCounts`) and row
+    * counts per loaded table, as the pipeline's steps 4+5 need them. */
+  final case class Counts(files: Map[String, Long], tables: Map[String, Long])
+
+  /** Steps 4+5 in one query: the distributed `wc -l` of every file and a
+    * row count of every table, tagged by kind and folded into a single
+    * `groupBy(kind, key).count()` (one scan stage, at most two jobs under
+    * AQE) instead of one text scan plus one `count()` per table. Nothing
+    * runs when there are neither files nor tables. */
+  def fusedCounts(spark: SparkSession, files: Seq[Path], tables: Map[String, DataFrame]): Counts = {
+    val lines = if (files.isEmpty) Nil else Seq(
+      spark.read.textFile(files.map(_.toString): _*)
+        .select(lit("file").as("kind"), input_file_name().as("key")))
+    val rows = tables.toSeq.map { case (name, df) =>
+      df.select(lit("table").as("kind"), lit(name).as("key"))
+    }
+    val counts = (lines ++ rows).reduceOption(_.unionAll(_)).toSeq
+      .flatMap(_.groupBy("kind", "key").count().collect())
+      .groupMap(_.getString(0))(r => r.getString(1) -> r.getLong(2))
+    Counts(counts.getOrElse("file", Nil).toMap, counts.getOrElse("table", Nil).toMap)
+  }
+
+  /** The pipeline's reconciliation: `fusedCounts`, file counts summed per
+    * table group, checked against the row counts. A group without a loaded
+    * table (`--disable-import`, a partial load) counts 0 rows, mirroring
+    * the reference's check-only mode, which reports the delta instead of
+    * crashing. */
+  def reconcile(
+      spark: SparkSession,
+      groups: Map[String, Seq[Path]],
+      tables: Map[String, DataFrame],
+      tolerance: Long = DefaultTolerance): Report = {
+    val counts = fusedCounts(spark, groups.values.flatten.toSeq, tables)
+    val csvByTable = groups.map { case (name, members) =>
+      name -> members.map(f => counts.files.getOrElse(f.toUri.toString,
+        counts.files.getOrElse(f.toString, 0L))).sum
+    }
+    check(csvByTable, groups.keys.map(n => n -> counts.tables.getOrElse(n, 0L)).toMap, tolerance)
   }
 
   /** Precise mode (S8, reference csvcount.py:13-23): count CSV *records*

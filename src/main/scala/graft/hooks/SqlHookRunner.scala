@@ -19,6 +19,10 @@ import org.slf4j.LoggerFactory
   *    LIKE INCLUDING ALL, ::casts in DDL, information_schema) is routed to
   *    the JDBC sink when one is configured, else skipped with a warning —
   *    hook scripts remain installable into a real PG alongside Spark.
+  *
+  * A script runs under two session confs scoped to the call
+  * (`ScriptConfs`), so a `CACHE TABLE` hook caches on the calling session
+  * rather than on a clone that outlives the load.
   */
 object SqlHookRunner {
   private val log = LoggerFactory.getLogger(getClass)
@@ -130,9 +134,37 @@ object SqlHookRunner {
 
   final case class RunReport(sparkRun: Int, passedThrough: Int, failed: Int)
 
+  /** Session confs a script runs under, restored when it returns. With
+    * both, `CACHE TABLE` builds its cached plan on the calling session.
+    * Otherwise Spark's cache manager clones the session to switch one of
+    * them off, and the clone (every temp view, each with its own Hadoop
+    * `Configuration`) stays reachable from the AQE pool threads that ran
+    * under it until they idle out, so a loader that caches in a hook
+    * retains a session per load. The clone would switch auto bucketed
+    * scan off for the cached plan anyway; other hook statements over
+    * bucketed tables now always scan by bucket. */
+  private val ScriptConfs = Seq(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+
+  /** Run `body` with `ScriptConfs` set, then put back each key's prior
+    * value, or unset it if it was unset. Session confs are shared, so
+    * concurrent queries on `spark` see them while `body` runs. */
+  private def withScriptConfs[A](spark: SparkSession)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prior = ScriptConfs.map { case (k, _) => k -> set.get(k) }
+    ScriptConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Execute a hook script: Spark-lane statements via spark.sql, pass-
     * through-lane via `passThrough` (a JDBC executor when a PG sink is
-    * configured; defaults to warn+skip). */
+    * configured; defaults to warn+skip). Statements run under
+    * `ScriptConfs`, scoped to this call. */
   def runScript(
       spark: SparkSession,
       script: Path,
@@ -141,7 +173,7 @@ object SqlHookRunner {
   ): RunReport = {
     val text = new String(Files.readAllBytes(script), "UTF-8")
     var sparkRun, passed, failed = 0
-    splitStatements(text).foreach { stmt =>
+    withScriptConfs(spark)(splitStatements(text).foreach { stmt =>
       classify(stmt) match {
         case SparkLane =>
           try { spark.sql(stmt).collect(); sparkRun += 1 }
@@ -153,7 +185,7 @@ object SqlHookRunner {
         case PassThroughLane =>
           passThrough(stmt); passed += 1
       }
-    }
+    })
     RunReport(sparkRun, passed, failed)
   }
 }

@@ -271,7 +271,7 @@ object LmIndex {
     // it — same single exchange, parallelism pinned. Scale shape: graft
     // entry points pin shuffle.partitions to the core count, so this is
     // the partitioning the exchange would have anyway.
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
     val perText = d.repartition(shufflePartitions, col("tkey"))
       .groupBy(col("tkey")).agg(first(col("text")).as("text"))
       .select(col("tkey"), explode(transform(

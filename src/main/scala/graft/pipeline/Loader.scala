@@ -18,20 +18,26 @@ import graft.ingest.{CsvTableReader, Unzipper}
   *   2. import discovered *.csv   (CsvTableReader → temp views;
   *      function registration ≙ functions.sql; prefix combine)
   *   3. post-load SQL hooks       (SqlHookRunner)
-  *   4. count CSV rows            (ReconciliationCheck.csvLineCounts)
-  *   5. reconciliation check      (ReconciliationCheck.check)
+  *   4. count CSV rows            (ReconciliationCheck.reconcile —
+  *   5. reconciliation check       one query for both steps)
   *
   * Individual per-file tables are registered under their raw stem, the
   * combined table under the slugified prefix (reference asymmetry,
   * SURVEY §1.2). The sink is pluggable: temp views always; `sink`
   * callback (e.g. PostgresSink.write or a parquet writer) per table.
   *
+  * Spark jobs run only where the work is: planning the per-file reads
+  * and the combines runs none (CsvTableReader derives headers on the
+  * driver), the sinks run as parallel batches, and steps 4+5 share one
+  * aggregate over the raw CSV lines and every loaded table.
+  *
   * THREAD-SAFETY CONTRACT: `sink` is invoked from up to `maxParallel`
-  * concurrent threads (one per in-flight import — `inParallel`), so the
-  * callback must be thread-safe: synchronize any shared mutable state it
-  * touches, or use a concurrent collection. The Spark actions it runs are
-  * already safe to issue concurrently (fair-scheduled jobs); it is the
-  * driver-side bookkeeping around them that this contract is about.
+  * concurrent threads (one per in-flight import or combined table —
+  * `inParallel`), so the callback must be thread-safe: synchronize any
+  * shared mutable state it touches, or use a concurrent collection. The
+  * Spark actions it runs are already safe to run concurrently
+  * (fair-scheduled jobs); it is the driver-side bookkeeping around them
+  * that this contract is about.
   * A sink that must be serial can set `maxParallel = 1`.
   */
 final case class LoaderConfig(
@@ -136,7 +142,7 @@ class Loader(
         val n = PgFunctions.install(exec)
         log.info(s"installed $n packaged functions into the JDBC sink")
       }
-      // prefix combine
+      // prefix combine: views on the driver, then the sinks in parallel
       if (config.combineTables) {
         for ((name, members) <- groups) {
           val stems = members.map(Slug.rawStem)
@@ -145,9 +151,11 @@ class Loader(
             .foreach { df =>
               df.createOrReplaceTempView(name)
               combined += name -> df
-              labeled(s"Combine $name")(sink(name, df))
             }
         }
+        inParallel(combined.toSeq.map { case (name, df) =>
+          () => labeled(s"Combine $name")(sink(name, df))
+        })
       }
     }
 
@@ -155,24 +163,16 @@ class Loader(
     config.postLoad.flatMap(SqlHookRunner.discoverScripts)
       .foreach(SqlHookRunner.runScript(spark, _, passThroughExec))
 
-    // Steps 4+5: count + reconcile
+    // Steps 4+5: count + reconcile in one query. Tables may be empty
+    // (--disable-import) or partial — a group without any loaded member
+    // counts 0 rows
     val report = if (!config.disableCheck) labeled("Check") {
-      val fileCounts = ReconciliationCheck.csvLineCounts(spark, csvs)
-      val csvByTable = groups.map { case (name, members) =>
-        name -> members.map(f => fileCounts.getOrElse(f.toUri.toString,
-          fileCounts.getOrElse(f.toString, 0L))).sum
+      val loaded = groups.flatMap { case (name, members) =>
+        combined.get(name)
+          .orElse(members.flatMap(m => tables.get(Slug.rawStem(m))).reduceOption(_.unionAll(_)))
+          .map(name -> _)
       }
-      // tables may be empty (--disable-import) or partial — missing members
-      // just count 0, mirroring the reference's check-only mode, which reads
-      // whatever the DB has and reports the delta instead of crashing
-      val dbCounts = groups.map { case (name, members) =>
-        val df = combined.getOrElse(name,
-          members.flatMap(m => tables.get(Slug.rawStem(m)))
-            .reduceOption[DataFrame](_.unionAll(_))
-            .getOrElse(spark.emptyDataFrame))
-        name -> df.count()
-      }
-      Some(ReconciliationCheck.check(csvByTable.toMap, dbCounts.toMap))
+      Some(ReconciliationCheck.reconcile(spark, groups, loaded))
     } else None
 
     LoadResult(tables, combined, report)

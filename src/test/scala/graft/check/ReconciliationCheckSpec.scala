@@ -1,8 +1,12 @@
 package graft.check
 
 import java.nio.file.Files
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.discover.{Slug, SourceScanner}
+import graft.pipeline.{Loader, LoaderConfig}
 
 class ReconciliationCheckSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -25,6 +29,52 @@ class ReconciliationCheckSpec extends AnyFunSuite {
     assert(precise.values.toSeq === Seq(3L)) // header + 2 records
     val fast = ReconciliationCheck.csvLineCounts(spark, Seq(f))
     assert(fast.values.toSeq === Seq(4L)) // raw lines, wc -l parity
+  }
+
+  test("fused counts equal csvLineCounts plus a per-table count()") {
+    val dir = Files.createTempDirectory("fused")
+    Files.write(dir.resolve("animals_1.csv"), "name,height\nGrizzly,220\nGiraffe,600\n".getBytes)
+    // no trailing newline: wc -l would say 1, the line count says 2
+    Files.write(dir.resolve("animals_2.csv"), "name,height\nWallabie,180".getBytes)
+    Files.write(dir.resolve("plants_1.csv"), "name\nfern\nmoss\noak\n".getBytes)
+    val csvs = SourceScanner.discoverCsvs(Seq(dir))
+    val groups = SourceScanner.groupByTable(csvs)
+    val lines = ReconciliationCheck.csvLineCounts(spark, csvs)
+    assert(lines.values.toSeq.sorted === Seq(2L, 3L, 4L))
+
+    val configs = Seq(
+      "combined" -> LoaderConfig(sources = Seq(dir), combineTables = true),
+      "members" -> LoaderConfig(sources = Seq(dir)),
+      "disableImport" -> LoaderConfig(sources = Seq(dir), disableImport = true))
+    for ((label, cfg) <- configs) {
+      val result = new Loader(spark, cfg).load()
+      val tables: Map[String, DataFrame] = groups.flatMap { case (name, members) =>
+        result.combined.get(name)
+          .orElse(members.flatMap(m => result.tables.get(Slug.rawStem(m))).reduceOption(_.unionAll(_)))
+          .map(name -> _)
+      }
+      val fused = ReconciliationCheck.fusedCounts(spark, csvs, tables)
+      assert(fused.files === lines, label)
+      assert(fused.tables === tables.map { case (n, df) => n -> df.count() }, label)
+      // the report the loader builds from them
+      val expected = groups.toSeq.map { case (name, members) =>
+        ReconciliationCheck.TableDelta(name, members.map(f => lines(f.toUri.toString)).sum,
+          tables.get(name).fold(0L)(_.count()))
+      }
+      assert(result.report.get.tables === expected, label)
+    }
+  }
+
+  test("fused counts over zero CSVs run no query") {
+    val (counts, jobs) = JobCounter(spark.sparkContext)(
+      ReconciliationCheck.fusedCounts(spark, Seq.empty, Map.empty))
+    assert(counts === ReconciliationCheck.Counts(Map.empty, Map.empty))
+    assert(jobs === 0)
+    val empty = Files.createTempDirectory("nocsv")
+    val (result, loadJobs) = JobCounter(spark.sparkContext)(
+      new Loader(spark, LoaderConfig(sources = Seq(empty), combineTables = true)).load())
+    assert(result.report.get.tables.isEmpty)
+    assert(loadJobs === 0)
   }
 
   test("delta ledger and fatal threshold") {

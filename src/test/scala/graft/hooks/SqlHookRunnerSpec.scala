@@ -102,4 +102,63 @@ class SqlHookRunnerSpec extends AnyFunSuite {
     assert(passed.head.startsWith("CREATE OR REPLACE FUNCTION"))
     assert(spark.sql("SELECT id2 FROM hook_out").collect().head.getInt(0) === 2)
   }
+
+  private val scriptConfs = Seq(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+
+  private def script(sql: String) = {
+    val f = Files.createTempFile("hook", ".sql")
+    Files.write(f, sql.getBytes("UTF-8"))
+    f
+  }
+
+  test("CACHE TABLE in a hook caches on the calling session, not a clone") {
+    Seq((1, "x"), (2, "y")).toDF("id", "v").createOrReplaceTempView("cache_src")
+    val report = SqlHookRunner.runScript(spark,
+      script("CACHE TABLE hook_cached AS SELECT id, v FROM cache_src WHERE id > 1;"))
+    assert(report.sparkRun === 1 && report.failed === 0)
+    try {
+      val cached = spark.sharedState.cacheManager
+        .lookupCachedData(spark.table("hook_cached").asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      assert(cached.isDefined)
+      assert(cached.get.cachedRepresentation.cacheBuilder.cachedPlan.session eq spark)
+      assert(spark.table("hook_cached").collect().map(_.getInt(0)).toSeq === Seq(2))
+    } finally spark.catalog.dropTempView("hook_cached")
+  }
+
+  test("script confs are scoped to the call: set, unset and failing scripts restore them") {
+    val Seq(partitioning, bucketing) = scriptConfs
+    def explicit = scriptConfs.map(k => spark.conf.getAll.get(k))
+    var during = Seq.empty[Option[String]]
+    val observe: String => Unit = _ => during = explicit
+    val passThrough = "CREATE EXTENSION observe_confs;\n"
+    try {
+      // previously set: the prior values come back
+      spark.conf.set(partitioning, "false")
+      spark.conf.set(bucketing, "true")
+      SqlHookRunner.runScript(spark, script(passThrough + "SELECT 1;"), observe)
+      assert(during === Seq(Some("true"), Some("false")))
+      assert(explicit === Seq(Some("false"), Some("true")))
+
+      // previously unset: unset again, not pinned to the defaults
+      scriptConfs.foreach(spark.conf.unset)
+      SqlHookRunner.runScript(spark, script(passThrough + "SELECT 1;"), observe)
+      assert(during === Seq(Some("true"), Some("false")))
+      assert(explicit === Seq(None, None))
+
+      // a failing Spark statement is logged and counted, the confs restored
+      val failed = SqlHookRunner.runScript(spark,
+        script("SELECT * FROM no_such_hook_table;\n" + passThrough), observe)
+      assert(failed.failed === 1)
+      assert(explicit === Seq(None, None))
+
+      // a throwing pass-through statement propagates, the confs restored
+      assertThrows[IllegalStateException] {
+        SqlHookRunner.runScript(spark, script(passThrough),
+          _ => throw new IllegalStateException("sink down"))
+      }
+      assert(explicit === Seq(None, None))
+    } finally scriptConfs.foreach(spark.conf.unset)
+  }
 }

@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -55,6 +57,46 @@ class IngestSpec extends AnyFunSuite {
     assert(row.getString(0) === "Grizzly")
     assert(row.getString(1) === "North America")
     assert(row.getString(2) === "220") // text, not int — pgfutter semantics
+  }
+
+  test("driver-side header: columns and rows match Spark's own header inference, no jobs") {
+    val dir = Files.createTempDirectory("hdr")
+    val corpus = Seq(
+      "bom" -> (Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
+        "Id,Name\n1,a\n2,b\n".getBytes("UTF-8")),
+      "crlf" -> "id,name\r\n1,a\r\n2,b\r\n".getBytes("UTF-8"),
+      "blank_lead" -> "\n  \n\nid,name\n1,a\n".getBytes("UTF-8"),
+      "quoted" -> "\"a,b\",\"say \"\"hi\"\"\",c\n1,\"x,y\",3\n".getBytes("UTF-8"),
+      "empty_cell" -> "a,,c\n1,2,3\n".getBytes("UTF-8"),
+      "dup_case" -> "Name,name,NAME,x\n1,2,3,4\n".getBytes("UTF-8"),
+      "latin1" -> "café,größe\nthé,1\n".getBytes("ISO-8859-1"),
+      "header_only" -> "a,b\n".getBytes("UTF-8"),
+      "empty" -> Array.empty[Byte])
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("\u0001"))
+    for ((name, bytes) <- corpus) {
+      val f = dir.resolve(s"$name.csv")
+      Files.write(f, bytes)
+      val (df, jobs) = JobCounter(spark.sparkContext)(CsvTableReader.read(spark, Seq(f)))
+      assert(jobs === 0, s"$name: read started $jobs jobs")
+      // Spark's own header inference, in the detected encoding
+      val inferred = spark.read.option("header", "true")
+        .option("encoding", CsvTableReader.detectEncoding(f))
+        .csv(f.toString)
+      val expected = inferred.toDF(inferred.columns.map(CsvTableReader.sanitize).toIndexedSeq: _*)
+      assert(df.columns.toSeq === expected.columns.toSeq, name)
+      assert(df.schema.fields.forall(_.dataType == StringType), name)
+      assert(rows(df) === rows(expected), name)
+    }
+  }
+
+  test("csv read: unquoted empty field is NULL, quoted empty field stays ''") {
+    val f = Files.createTempDirectory("nulls").resolve("t.csv")
+    Files.write(f, "a,b,c\n,\"\",x\n".getBytes("UTF-8"))
+    val row = CsvTableReader.read(spark, Seq(f)).collect().head
+    assert(row.isNullAt(0))
+    assert(row.getString(1) === "")
+    assert(row.getString(2) === "x")
   }
 
   test("multi-file read unions positionally like LIKE-INCLUDING-ALL") {

@@ -2,8 +2,12 @@ package graft.pipeline
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.JobCounter
 import graft.SparkTestSession
+import graft.check.ReconciliationCheck
 import graft.cli.Main
+import graft.discover.SourceScanner
+import graft.ingest.CsvTableReader
 
 /** End-to-end pipeline slice (SURVEY §7.2): animals fixture → discover →
   * all-text import → combine → post-load typed cast → reconciliation. */
@@ -156,6 +160,26 @@ class LoaderSpec extends AnyFunSuite {
     assert(report.tables.map(_.table) === Seq("orders"))
     assert(report.totalDelta === 2L)
     assert(!report.fatal)
+  }
+
+  test("job budget: header planning starts no job, steps 4+5 at most two") {
+    val dir = animalsDir()
+    val (_, readJobs) = JobCounter(spark.sparkContext)(
+      CsvTableReader.read(spark, Seq(dir.resolve("animals_1.csv"))))
+    assert(readJobs === 0)
+
+    val csvs = SourceScanner.discoverCsvs(Seq(dir))
+    val tables = Map("animals" -> CsvTableReader.read(spark, csvs))
+    val (report, checkJobs) = JobCounter(spark.sparkContext)(
+      ReconciliationCheck.reconcile(spark, SourceScanner.groupByTable(csvs), tables))
+    assert(report.totalDelta === 2L)
+    assert(checkJobs <= 2, s"steps 4+5 started $checkJobs jobs")
+
+    // with the default no-op sink, a combining load runs nothing but the check
+    val (result, loadJobs) = JobCounter(spark.sparkContext)(
+      new Loader(spark, LoaderConfig(sources = Seq(dir), combineTables = true)).load())
+    assert(result.report.get.totalDelta === 2L)
+    assert(loadJobs <= 2, s"load started $loadJobs jobs")
   }
 
   test("cli parse: full flag surface") {
