@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,8 +14,7 @@ import org.apache.spark.sql.functions._
   * (the smoothing denominators) derive from it at read time, so
   * `append ≡ rebuild` holds by arithmetic with no cap corrections.
   *
-  * Layout under `modelDir` ([[LmIndex]] conventions: epoch-partitioned,
-  * single-writer, dot-prefixed staging, one rename per table):
+  * Layout under `modelDir` (a [[CountStore]]):
   *  - `counts.parquet/epoch=K`: (word, lang, c) — train-split token
   *    counts of the epoch's documents
   *  - `docs.parquet/epoch=K`:  (doc_id) — membership ledger (ALL docs of
@@ -25,99 +23,40 @@ import org.apache.spark.sql.functions._
   */
 object ClassifyIndex {
 
-  private def writeEpoch(
-      spark: SparkSession, modelDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(modelDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for ((tab, df) <- Seq(
-        "counts.parquet" -> ClassifyOps.trainCounts(docs),
-        "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-      AtomicPublish.stageAndRename(
-        spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-        tmp => df.write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-  }
+  private val Counts = CountTable("counts.parquet", Seq("word", "lang"), Seq("c"))
+  private val store =
+    new CountStore("classify", Seq(Counts), docs => Seq(ClassifyOps.trainCounts(docs)))
 
   /** Train (overwrite) the model as epoch 0. */
   def buildModel(spark: SparkSession, docs: DataFrame, modelDir: String): Unit =
-    StoreLock.withLock(spark, modelDir, "classify-build") {
-    val root = new Path(modelDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    writeEpoch(spark, modelDir, 0, docs)
-  }
+    store.build(spark, docs, modelDir)
 
   /** Fold a batch of labeled documents into the model: O(batch) work;
     * readers sum counts across epochs, so the result is EXACTLY the
-    * rebuild. Caller dedupes batches against [[residentDocIds]]. A doc
-    * with a pending deletion stays dead ([[NegEpochs]] shadow
-    * semantics) until the deletion-applying compact. */
-  def appendToModel(spark: SparkSession, modelDir: String, batch0: DataFrame): Unit =
-    StoreLock.withLock(spark, modelDir, "classify-append") {
-    val batch = NegEpochs.minus(spark, modelDir, batch0)
-    val counts = new Path(modelDir, "counts.parquet")
-    val fs = counts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ledger-derived epoch + orphan reconcile ([[EpochLedger]])
-    val next = EpochLedger.reconciledNext(
-      spark, s"$modelDir/docs.parquet", Seq(counts.toString))
-    writeEpoch(spark, modelDir, next, batch)
-  }
+    * rebuild. Caller dedupes batches against [[residentDocIds]]. */
+  def appendToModel(spark: SparkSession, modelDir: String, batch: DataFrame): Unit =
+    store.append(spark, modelDir, batch)
 
   /** Doc_ids already folded into the model — pending deletions excluded. */
   def residentDocIds(spark: SparkSession, modelDir: String): DataFrame =
-    NegEpochs.minus(spark, modelDir,
-      spark.read.parquet(s"$modelDir/docs.parquet").select(col("doc_id")).distinct())
+    store.residentDocIds(spark, modelDir)
 
   /** Takedown: subtract the victim documents' own train-split token
-    * counts as a negative epoch ([[NegEpochs]] — the additive arithmetic
-    * reversed); needs the doc ROWS, the counter table is not
-    * doc-attributed. A holdout-split victim contributes zero counts but
-    * still leaves the ledger. O(victims). */
+    * counts as a negative epoch ([[NegEpochs]]); needs the doc ROWS, the
+    * counter table is not doc-attributed. A holdout-split victim
+    * contributes zero counts but still leaves the ledger. O(victims). */
   def deleteFromModel(spark: SparkSession, modelDir: String, docRows: DataFrame): Unit =
-    StoreLock.withLock(spark, modelDir, "classify-delete") {
-    val v = NegEpochs.victims(spark, modelDir, docRows,
-      spark.read.parquet(s"$modelDir/docs.parquet")).persist()
-    try {
-      if (!v.isEmpty)
-        NegEpochs.writeDeletion(spark, modelDir,
-          Seq("counts.parquet" -> ClassifyOps.trainCounts(v)),
-          v.select(col("doc_id")))
-    } finally { v.unpersist(); () }
-  }
+    store.delete(spark, modelDir, docRows)
 
-  /** Fold all epochs into one: counts sum, ledger dedups — exactly the
-    * merge every read already performs ([[EpochCompact]] swap safety).
-    * PENDING DELETIONS are applied with a whole-store swap instead (the
-    * [[NegEpochs]] cross-table-atomic retire; see [[LmIndex.compact]]). */
+  /** Fold all epochs into one ([[CountStore.compact]]). */
   def compact(spark: SparkSession, modelDir: String): Unit =
-    StoreLock.withLock(spark, modelDir, "classify-compact") {
-    if (NegEpochs.pending(spark, modelDir)) {
-      val mc = modelCounts(spark, modelDir).persist()
-      val rd = residentDocIds(spark, modelDir).persist()
-      try NegEpochs.applyWithSwap(spark, modelDir) { tmp =>
-        mc.write.parquet(s"$tmp/counts.parquet/epoch=0")
-        rd.write.parquet(s"$tmp/docs.parquet/epoch=0")
-      } finally { mc.unpersist(); rd.unpersist(); () }
-      return
-    }
-    // orphaned counter residue must not fold into the committed epoch=0
-    EpochLedger.dropOrphans(
-      spark, s"$modelDir/docs.parquet", Seq(s"$modelDir/counts.parquet"))
-    EpochCompact.compactTable(spark, s"$modelDir/counts.parquet",
-      _.groupBy(col("word"), col("lang")).agg(sum(col("c")).as("c")))
-    EpochCompact.compactTable(spark, s"$modelDir/docs.parquet", _.distinct())
-  }
+    store.compact(spark, modelDir)
 
   /** The served counts table: summed across ALL epochs, net of committed
     * deletions — every smoothing denominator downstream derives from
     * this one aggregate. */
   def modelCounts(spark: SparkSession, modelDir: String): DataFrame =
-    NegEpochs.netTotals(spark, modelDir, "counts.parquet",
-      Seq("word", "lang"), Seq("c"),
-      spark.read.parquet(s"$modelDir/counts.parquet")
-        .filter(col("epoch") <=
-          EpochLedger.committedMax(spark, s"$modelDir/docs.parquet")))
+    store.totals(spark, modelDir, Counts)
 
   /** Classify the holdout split of `docs` against the persisted model:
     * the q_classify_freq output shape, training corpus never re-read. */

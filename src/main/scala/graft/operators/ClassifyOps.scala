@@ -23,12 +23,13 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: training is two wordcount-shaped aggs (token×class counts
   * and class totals — both vocabulary-bounded model artifacts, never
-  * corpus-sized); inference joins the test token table to the vocab×k
-  * score grid on `word` (wordcount-shaped shuffle; the grid is
-  * vocabulary-bounded so AQE may broadcast it, but the plan is correct
-  * either way); the per-document argmax is a window PARTITIONED by doc_id.
-  * Nothing funnels to a single reducer; unseen-vocabulary tokens get the
-  * per-class smoothing floor via the k-row broadcast default table.
+  * corpus-sized); inference joins the test tokens straight to the counts
+  * table on `word` (wordcount-shaped shuffle, fanning out only to the
+  * classes that saw the word — no vocab×k grid, see [[textScores]]);
+  * every (token, class) slot without a training count, in or out of
+  * vocabulary, gets the per-class smoothing floor via the k-row
+  * broadcast default table; the per-text argmax is a window PARTITIONED
+  * by the text key. Nothing funnels to a single reducer.
   *
   * Overflow bound: (c+1)·1e9 needs c < 9.2e9 — holds to ~10 TB of tokens
   * per class; beyond that the scale constant drops a digit.
@@ -61,7 +62,8 @@ object ClassifyOps {
 
   /** Score the holdout split of `docs` against a trained counts table:
     * smoothing denominators derive from the counts, inference is the
-    * token⨝grid join + a text-partitioned argmax window. The prediction
+    * token⨝counts join plus the smoothing-floor default term, then a
+    * text-partitioned argmax window. The prediction
     * is a pure function of the text, so it is computed once per DISTINCT
     * text and attributed back to doc_ids by an internal hash join —
     * exact copies (the dominant redundancy at corpus scale) cost one

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,88 +19,44 @@ import org.apache.spark.sql.functions._
   * word→bucket map is a pure function the serve path recomputes from
   * the scored documents' own words.
   *
-  * Layout under `indexDir` (family conventions):
+  * Layout under `indexDir` (a [[CountStore]]):
   *  - `buckets.parquet/epoch=K`: (b, c_t, c_r) — the epoch's counters
   *  - `docs.parquet/epoch=K`:    (doc_id) — replay-safe ledger
   */
 object DsirIndex {
 
-  // counters FIRST, ledger SECOND — the docs.parquet rename is the
-  // commit point of the [[EpochLedger]] protocol (a crash in between
-  // leaves counter residue the next append reconciles away and reads
-  // already skip)
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    for ((tab, df) <- Seq(
-        "buckets.parquet" ->
-          TextOps.dsirBucketStats(docs.select(col("text"), col("lang"))),
-        "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-      AtomicPublish.stageAndRename(
-        spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-        tmp => df.write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-  }
+  private val Buckets = CountTable("buckets.parquet", Seq("b"), Seq("c_t", "c_r"))
+  private val store = new CountStore("dsir", Seq(Buckets),
+    docs => Seq(TextOps.dsirBucketStats(docs.select(col("text"), col("lang")))))
 
   /** Estimate (overwrite) the distributions as epoch 0. */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "dsir-build") {
-    val root = new Path(indexDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-    writeEpoch(spark, indexDir, 0, docs)
-  }
+    store.build(spark, docs, indexDir)
 
   /** Fold a batch of new documents in — O(batch); counters sum across
     * epochs at read time, so this is EXACTLY the rebuild, including
-    * across the append crash window: the epoch number derives from the
-    * LEDGER and any orphaned counter epoch (counters renamed, ledger
-    * not) is reconciled away before the rewrite, so a replayed batch
-    * lands exactly once ([[EpochLedger]]). Caller dedupes against
-    * [[residentDocIds]] (the streaming lane anti-joins). */
-  def appendToIndex(spark: SparkSession, indexDir: String, batch0: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "dsir-append") {
-    // a doc with a pending deletion stays dead until the deletion-
-    // applying compact ([[NegEpochs]] shadow semantics)
-    val batch = NegEpochs.minus(spark, indexDir, batch0)
-    val next = EpochLedger.reconciledNext(
-      spark, s"$indexDir/docs.parquet", Seq(s"$indexDir/buckets.parquet"))
-    writeEpoch(spark, indexDir, next, batch)
-  }
+    * across the append crash window ([[EpochLedger]]: a replayed batch
+    * lands exactly once). Caller dedupes against [[residentDocIds]]
+    * (the streaming lane anti-joins). */
+  def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
+    store.append(spark, indexDir, batch)
 
   /** Doc_ids already folded in (the streaming anti-join target) —
     * pending deletions excluded. */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    NegEpochs.minus(spark, indexDir,
-      spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct())
+    store.residentDocIds(spark, indexDir)
 
   /** Takedown: subtract the victim documents' own hashed-bucket counters
-    * as a negative epoch ([[NegEpochs]] — the additive arithmetic
-    * reversed); needs the doc ROWS (text, lang), the 512-row model is
-    * not doc-attributed. O(victims). */
+    * as a negative epoch ([[NegEpochs]]); needs the doc ROWS (text,
+    * lang), the 512-row model is not doc-attributed. O(victims). */
   def deleteFromIndex(spark: SparkSession, indexDir: String, docRows: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "dsir-delete") {
-    val v = NegEpochs.victims(spark, indexDir, docRows,
-      spark.read.parquet(s"$indexDir/docs.parquet")).persist()
-    try {
-      if (!v.isEmpty)
-        NegEpochs.writeDeletion(spark, indexDir,
-          Seq("buckets.parquet" ->
-            TextOps.dsirBucketStats(v.select(col("text"), col("lang")))),
-          v.select(col("doc_id")))
-    } finally { v.unpersist(); () }
-  }
+    store.delete(spark, indexDir, docRows)
 
   /** The served model: per-bucket counters summed across COMMITTED
-    * epochs (uncommitted crash residue is partition-pruned out), net of
-    * committed deletions — bounded by the hashed feature space
-    * (512 rows). */
+    * epochs, net of committed deletions — bounded by the hashed feature
+    * space (512 rows). */
   def bucketTotals(spark: SparkSession, indexDir: String): DataFrame =
-    NegEpochs.netTotals(spark, indexDir, "buckets.parquet",
-      Seq("b"), Seq("c_t", "c_r"),
-      spark.read.parquet(s"$indexDir/buckets.parquet")
-        .filter(col("epoch") <=
-          EpochLedger.committedMax(spark, s"$indexDir/docs.parquet")))
+    store.totals(spark, indexDir, Buckets)
 
   /** Score documents against the persisted distributions — the
     * q_dsir_vote output; the corpus is scanned only to featurize the
@@ -109,33 +64,9 @@ object DsirIndex {
   def scoreDocs(spark: SparkSession, docs: DataFrame, indexDir: String): DataFrame =
     TextOps.dsirScoreAgainst(docs, bucketTotals(spark, indexDir))
 
-  /** Fold all epochs into one: counters sum, ledger dedups — exactly the
-    * merge every read already performs. Order is the [[EpochLedger]]
-    * contract: counters fold BEFORE the ledger, so a crash in between
-    * leaves counter epochs ≤ ledger epochs (tolerated) rather than a
-    * folded counter table the next append would mistake for residue.
-    * PENDING DELETIONS are applied with a whole-store swap instead (the
-    * [[NegEpochs]] cross-table-atomic retire; see [[LmIndex.compact]]). */
+  /** Fold all epochs into one ([[CountStore.compact]]). */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "dsir-compact") {
-    if (NegEpochs.pending(spark, indexDir)) {
-      val bt = bucketTotals(spark, indexDir).persist()
-      val rd = residentDocIds(spark, indexDir).persist()
-      try NegEpochs.applyWithSwap(spark, indexDir) { tmp =>
-        bt.write.parquet(s"$tmp/buckets.parquet/epoch=0")
-        rd.write.parquet(s"$tmp/docs.parquet/epoch=0")
-      } finally { bt.unpersist(); rd.unpersist(); () }
-      return
-    }
-    // orphaned counter residue must NOT fold into the committed epoch=0
-    // (it would stop being partition-prunable and the replayed batch
-    // would then double-count) — reconcile it away first
-    EpochLedger.dropOrphans(
-      spark, s"$indexDir/docs.parquet", Seq(s"$indexDir/buckets.parquet"))
-    EpochCompact.compactTable(spark, s"$indexDir/buckets.parquet",
-      _.groupBy(col("b")).agg(sum(col("c_t")).as("c_t"), sum(col("c_r")).as("c_r")))
-    EpochCompact.compactTable(spark, s"$indexDir/docs.parquet", _.distinct())
-  }
+    store.compact(spark, indexDir)
 
   // --- q_dsir_vote_indexed: the persisted-distribution lane --------------
   // Store built lazily on first use, keyed by the documents parquet's

@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe epoch commit for the counter+ledger table PAIRS
-  * ([[DsirIndex]] buckets+docs, [[TokenizerIndex]] stats+docs): each
-  * append publishes two renames, and the window between them used to
-  * break replay idempotence — the counters committed but the ledger
+/** Crash-safe epoch commit for the counter+ledger table PAIRS — the
+  * count models through [[CountStore]] (which owns their whole
+  * lifecycle), [[TokenizerIndex]] stats+docs, and the [[NegEpochs]]
+  * deletion ledger: each append publishes one rename per counter table
+  * and then the ledger's, and the window between them used to break
+  * replay idempotence — the counters committed but the ledger
   * didn't, so the documented replay anti-join re-appended the same batch
   * and DOUBLE-COUNTED the additive counters (set-valued stores are
   * replay-idempotent by dedup; counters are not).
   *
-  * The discipline, shared so the two stores can't drift apart:
+  * The discipline, shared so the stores can't drift apart:
   *
   *  - the LEDGER rename is the commit point: counters epoch first,
   *    ledger epoch second;

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,12 +14,12 @@ import org.apache.spark.sql.types.DoubleType
   * bands), and the simplest: counts are ADDITIVE, so an append is exact
   * by arithmetic — no cap corrections, no merge/split.
   *
-  * Layout under `modelDir` (epoch-partitioned, single-writer, the
-  * [[AnnIndex]] conventions: dot-prefixed staging, one rename per table
-  * per publish):
+  * Layout under `modelDir` (a [[CountStore]]):
   *  - `pairs.parquet/epoch=K`: (l, r, cnt) — copy-weighted bigram counts
-  *    of the epoch's documents; prefix counts are derived at read time by
-  *    summing over r (vocabulary-bounded, broadcast-sized after the agg)
+  *    of the epoch's documents
+  *  - `prefix.parquet/epoch=K`: (l, c1) — Σ_r cnt(l, r) of the same
+  *    epoch; a v1 store without it reads the prefix from the pairs and
+  *    gets it as a catch-up epoch on its next append or compact
   *  - `docs.parquet/epoch=K`:  (doc_id) — membership ledger, giving
   *    replay-safe streaming maintenance its anti-join target
   *
@@ -43,156 +42,85 @@ object LmIndex {
       .agg(sum(col("n_copies")).as("cnt"))
   }
 
-  private def writeEpoch(
-      spark: SparkSession, modelDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(modelDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // prefix counts Σ_r cnt(l, r) ride the same epoch (round 9): they are
-    // additive like the pairs, and persisting them cuts one pairs-table
-    // read+aggregation from EVERY scoring call — the store serves its own
-    // smoothing denominators. One pair-count pass feeds both tables.
+  private def prefixOf(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("l")).agg(sum(col("cnt")).as("c1"))
+
+  private val Pairs = CountTable("pairs.parquet", Seq("l", "r"), Seq("cnt"))
+  private val Prefix = CountTable("prefix.parquet", Seq("l"), Seq("c1"))
+  // prefix counts Σ_r cnt(l, r) ride the same epoch: they are
+  // additive like the pairs, and persisting them cuts one pairs-table
+  // read+aggregation from EVERY scoring call — the store serves its own
+  // smoothing denominators. One pair-count pass feeds both tables.
+  private val store = new CountStore("lm", Seq(Pairs, Prefix), docs => {
     val pc = pairCounts(docs).persist()
-    try {
-      for ((tab, df) <- Seq(
-          "pairs.parquet" -> pc,
-          "prefix.parquet" -> pc.groupBy(col("l")).agg(sum(col("cnt")).as("c1")),
-          "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-        AtomicPublish.stageAndRename(
-          spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-          tmp => df.write.mode("overwrite").parquet(tmp.toString)
-        }
+    Seq(pc, prefixOf(pc))
+  })
+
+  private def hasPrefix(spark: SparkSession, modelDir: String): Boolean =
+    StoreRoot.exists(spark, s"$modelDir/${Prefix.name}")
+
+  /** v1→v2 migration: a store built before prefix.parquet existed gets a
+    * one-time catch-up epoch aggregated from ALL resident pairs, so
+    * epochs stay consistent (a partially-prefixed store would serve
+    * silently wrong denominators). Runs under the caller's store lock,
+    * before the [[CountStore]] writes that expect both tables. */
+  private def catchUpPrefix(spark: SparkSession, modelDir: String): Unit =
+    if (StoreRoot.exists(spark, s"$modelDir/${Pairs.name}") && !hasPrefix(spark, modelDir))
+      AtomicPublish.stageAndRename(
+        spark, s"$modelDir/${Prefix.name}", ".migrate.tmp", "epoch=0") { tmp =>
+        prefixOf(spark.read.parquet(s"$modelDir/${Pairs.name}"))
+          .write.mode("overwrite").parquet(tmp.toString)
       }
-    } finally { pc.unpersist(); () }
-  }
 
   /** Train (overwrite) the model as epoch 0. */
   def buildModel(spark: SparkSession, docs: DataFrame, modelDir: String): Unit =
-    StoreLock.withLock(spark, modelDir, "lm-build") {
-    val root = new Path(modelDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    writeEpoch(spark, modelDir, 0, docs)
-  }
+    store.build(spark, docs, modelDir)
 
   /** Fold a batch of new documents into the model: O(batch) work — the
-    * batch's own counts land as a fresh epoch, published by one rename
-    * per table; readers sum across epochs, so the result is EXACTLY the
-    * rebuild (addition is the whole merge). Caller dedupes batches
-    * against `residentDocIds` (the streaming lane anti-joins). A doc
-    * with a pending deletion stays dead ([[NegEpochs]] shadow
-    * semantics) until the deletion-applying compact. */
-  def appendToModel(spark: SparkSession, modelDir: String, batch0: DataFrame): Unit =
+    * batch's own counts land as a fresh epoch; readers sum across
+    * epochs, so the result is EXACTLY the rebuild (addition is the whole
+    * merge). Caller dedupes batches against `residentDocIds` (the
+    * streaming lane anti-joins). */
+  def appendToModel(spark: SparkSession, modelDir: String, batch: DataFrame): Unit =
     StoreLock.withLock(spark, modelDir, "lm-append") {
-    val batch = NegEpochs.minus(spark, modelDir, batch0)
-    val pairs = new Path(modelDir, "pairs.parquet")
-    val fs = pairs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // v1→v2 migration: a store built before prefix.parquet existed gets a
-    // one-time catch-up epoch aggregated from ALL resident pairs, so
-    // epochs stay consistent (a partially-prefixed store would serve
-    // silently wrong denominators)
-    val prefix = new Path(modelDir, "prefix.parquet")
-    if (!fs.exists(prefix)) {
-      AtomicPublish.stageAndRename(
-        spark, prefix.toString, ".migrate.tmp", "epoch=0") { tmp =>
-        spark.read.parquet(pairs.toString)
-          .groupBy(col("l")).agg(sum(col("cnt")).as("c1"))
-          .write.mode("overwrite").parquet(tmp.toString)
-      }
+      catchUpPrefix(spark, modelDir)
+      store.append(spark, modelDir, batch)
     }
-    // ledger-derived epoch + orphan reconcile ([[EpochLedger]]): a crash
-    // between the counter renames and the ledger rename must not let the
-    // replayed batch double-count the bigram/prefix counters
-    val next = EpochLedger.reconciledNext(spark, s"$modelDir/docs.parquet",
-      Seq(pairs.toString, prefix.toString))
-    writeEpoch(spark, modelDir, next, batch)
-  }
 
   /** Doc_ids already folded into the model (the streaming anti-join
     * target) — pending deletions excluded. */
   def residentDocIds(spark: SparkSession, modelDir: String): DataFrame =
-    NegEpochs.minus(spark, modelDir,
-      spark.read.parquet(s"$modelDir/docs.parquet").select(col("doc_id")).distinct())
+    store.residentDocIds(spark, modelDir)
 
   /** Takedown: subtract the victim documents' own copy-weighted bigram
-    * and prefix counts as negative epochs — the additive arithmetic run
-    * in reverse ([[NegEpochs]]); needs the doc ROWS (text), since the
-    * counter tables are not doc-attributed. O(victims); scores exclude
-    * the docs immediately; [[compact]] makes the deletion durable. */
+    * and prefix counts as negative epochs ([[NegEpochs]]); needs the doc
+    * ROWS (text), since the counter tables are not doc-attributed.
+    * O(victims); scores exclude the docs immediately; [[compact]] makes
+    * the deletion durable. */
   def deleteFromModel(spark: SparkSession, modelDir: String, docRows: DataFrame): Unit =
-    StoreLock.withLock(spark, modelDir, "lm-delete") {
-    val v = NegEpochs.victims(spark, modelDir, docRows,
-      spark.read.parquet(s"$modelDir/docs.parquet")).persist()
-    try {
-      if (!v.isEmpty) {
-        val pc = pairCounts(v)
-        NegEpochs.writeDeletion(spark, modelDir, Seq(
-          "pairs.parquet" -> pc,
-          "prefix.parquet" -> pc.groupBy(col("l")).agg(sum(col("cnt")).as("c1"))),
-          v.select(col("doc_id")))
-      }
-    } finally { v.unpersist(); () }
-  }
+    store.delete(spark, modelDir, docRows)
 
-  /** Fold all epochs into one: counts sum, ledger dedups — exactly the
-    * merge every read already performs ([[EpochCompact]] swap safety).
-    * PENDING DELETIONS are applied with a whole-store swap instead: the
-    * staged store serves pos−neg with the deletion state gone — the
-    * only cross-table-atomic way to retire negative epochs (a per-table
-    * fold could crash between subtracting and clearing and subtract
-    * twice on the re-run). */
+  /** Fold all epochs into one ([[CountStore.compact]]; a v1 store gets
+    * its prefix table first). */
   def compact(spark: SparkSession, modelDir: String): Unit =
     StoreLock.withLock(spark, modelDir, "lm-compact") {
-    if (NegEpochs.pending(spark, modelDir)) {
-      val pt = pairTotals(spark, modelDir).persist()
-      val px = prefixTotals(spark, modelDir).persist()
-      val rd = residentDocIds(spark, modelDir).persist()
-      try NegEpochs.applyWithSwap(spark, modelDir) { tmp =>
-        pt.select(col("l"), col("r"), col("c12").as("cnt"))
-          .write.parquet(s"$tmp/pairs.parquet/epoch=0")
-        px.write.parquet(s"$tmp/prefix.parquet/epoch=0")
-        rd.write.parquet(s"$tmp/docs.parquet/epoch=0")
-      } finally { pt.unpersist(); px.unpersist(); rd.unpersist(); () }
-      return
+      catchUpPrefix(spark, modelDir)
+      store.compact(spark, modelDir)
     }
-    // orphaned counter residue must not fold into the committed epoch=0
-    EpochLedger.dropOrphans(spark, s"$modelDir/docs.parquet",
-      Seq(s"$modelDir/pairs.parquet", s"$modelDir/prefix.parquet"))
-    EpochCompact.compactTable(spark, s"$modelDir/pairs.parquet",
-      _.groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("cnt")))
-    val prefix = new Path(modelDir, "prefix.parquet")
-    if (prefix.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(prefix))
-      EpochCompact.compactTable(spark, prefix.toString,
-        _.groupBy(col("l")).agg(sum(col("c1")).as("c1")))
-    EpochCompact.compactTable(spark, s"$modelDir/docs.parquet", _.distinct())
-  }
 
-  /** Score documents against the persisted model: the q_lm_bigram output
-    * (n_bigrams, Σc12, Σc1, fit_score, n_hapax) with model counts summed
-    * across epochs — the corpus is scanned only to produce the scored
-    * docs' own bigrams, never to train. */
   /** Bigram totals (l, r, c12) summed across the store's epochs — the
     * model every reader scores against. Shared with the cross-entropy-
     * difference selection lane ([[SelectOps]]), which merges two stores. */
   private[operators] def pairTotals(spark: SparkSession, modelDir: String): DataFrame =
-    NegEpochs.netTotals(spark, modelDir, "pairs.parquet",
-        Seq("l", "r"), Seq("cnt"),
-        spark.read.parquet(s"$modelDir/pairs.parquet")
-          .filter(col("epoch") <=
-            EpochLedger.committedMax(spark, s"$modelDir/docs.parquet")))
+    store.totals(spark, modelDir, Pairs)
       .select(col("l"), col("r"), col("cnt").as("c12"))
 
   /** Prefix totals (l, c1): from the store's own prefix table when it has
     * one (v2); v1 read-only stores fall back to re-aggregating the pairs —
     * the sums are identical by arithmetic either way. */
-  private[operators] def prefixTotals(spark: SparkSession, modelDir: String): DataFrame = {
-    val prefix = new Path(modelDir, "prefix.parquet")
-    if (prefix.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(prefix))
-      NegEpochs.netTotals(spark, modelDir, "prefix.parquet",
-        Seq("l"), Seq("c1"), spark.read.parquet(prefix.toString)
-          .filter(col("epoch") <=
-            EpochLedger.committedMax(spark, s"$modelDir/docs.parquet")))
+  private[operators] def prefixTotals(spark: SparkSession, modelDir: String): DataFrame =
+    if (hasPrefix(spark, modelDir)) store.totals(spark, modelDir, Prefix)
     else pairTotals(spark, modelDir).groupBy(col("l")).agg(sum(col("c12")).as("c1"))
-  }
 
   // --- merged-totals serving artifact (round 17) --------------------------
   // Every scoring call re-derived the model view per serve: one
@@ -253,6 +181,10 @@ object LmIndex {
     org.apache.spark.sql.types.StructField("l", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("c1", org.apache.spark.sql.types.LongType)))
 
+  /** Score documents against the persisted model: the q_lm_bigram output
+    * (n_bigrams, Σc12, Σc1, fit_score, n_hapax) with model counts summed
+    * across epochs — the corpus is scanned only to produce the scored
+    * docs' own bigrams, never to train. */
   def scoreDocs(spark: SparkSession, docs: DataFrame, modelDir: String): DataFrame = {
     val totals = ensureTotals(spark, modelDir)
     val model = spark.read.schema(PairsTotalsSchema).parquet(s"$totals/pairs")

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deletion for the COUNT-MODEL families ([[LmIndex]] bigram counts,
-  * [[ClassifyIndex]] token×class counts, [[DsirIndex]] hashed-bucket
-  * counters): the [[Tombstones]] anti-join cannot delete from these
+/** Deletion for the COUNT-MODEL families (every [[CountStore]] — Span,
+  * DSIR, LM and classifier counts — plus [[SketchIndex]]'s count table):
+  * the [[Tombstones]] anti-join cannot delete from these
   * stores because their state is not doc-keyed — a document's
   * contribution is spread across shared counter rows. The additive
   * arithmetic runs in REVERSE instead: a takedown writes the victim

@@ -153,7 +153,7 @@ object SketchIndex {
   /** Fold all epochs into one — each table's merge is exactly what every
     * read performs ([[EpochCompact]] swap safety). PENDING DELETIONS are
     * applied with a whole-store swap instead (the [[NegEpochs]]
-    * cross-table-atomic retire; see [[LmIndex.compact]]). */
+    * cross-table-atomic retire; see [[CountStore.compact]]). */
   def compact(spark: SparkSession, indexDir: String): Unit =
     StoreLock.withLock(spark, indexDir, "sketch-compact") {
     if (NegEpochs.pending(spark, indexDir)) {

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,9 +16,9 @@ import org.apache.spark.sql.functions._
   * ≥2 duplicate filter, so a window whose occurrences straddle two
   * batches is still flagged, and `append ≡ rebuild` holds by arithmetic.
   *
-  * Layout under `indexDir` ([[LmIndex]]/[[AnnIndex]] conventions:
-  * epoch-partitioned, single-writer, dot-prefixed staging, one rename per
-  * table per publish — a crashed writer leaves only an invisible tmp):
+  * Layout under `indexDir` (a [[CountStore]]: epoch-partitioned,
+  * single-writer, dot-prefixed staging, one rename per table per
+  * publish — a crashed writer leaves only an invisible tmp):
   *  - `grams.parquet/epoch=K`: (gh1, gh2, cnt) — copy-weighted window
   *    counts of the epoch's documents (16-byte double-poly gram identity)
   *  - `docs.parquet/epoch=K`:  (doc_id) — membership ledger, the
@@ -27,105 +26,44 @@ import org.apache.spark.sql.functions._
   */
 object SpanIndex {
 
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for ((tab, df) <- Seq(
-        "grams.parquet" -> SpanDedup.gramCounts(docs),
-        "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-      AtomicPublish.stageAndRename(
-        spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-        tmp => df.write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-  }
+  private val Grams = CountTable("grams.parquet", Seq("gh1", "gh2"), Seq("cnt"))
+  private val store =
+    new CountStore("span", Seq(Grams), docs => Seq(SpanDedup.gramCounts(docs)))
 
   /** Build (overwrite) the index as epoch 0. */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "span-build") {
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    writeEpoch(spark, indexDir, 0, docs)
-  }
+    store.build(spark, docs, indexDir)
 
   /** Fold a batch of new documents into the index: O(batch) work — the
-    * batch's own window counts land as a fresh epoch, published by one
-    * rename per table. Readers sum across epochs before the duplicate
-    * filter, so the result is EXACTLY the rebuild (addition is the whole
-    * merge). Caller dedupes batches against [[residentDocIds]]. */
-  def appendToIndex(spark: SparkSession, indexDir: String, batch0: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "span-append") {
-    // a doc with a pending deletion stays dead until the deletion-
-    // applying compact ([[NegEpochs]] shadow semantics)
-    val batch = NegEpochs.minus(spark, indexDir, batch0)
-    val grams = new Path(indexDir, "grams.parquet")
-    val fs = grams.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ledger-derived epoch + orphan reconcile ([[EpochLedger]])
-    val next = EpochLedger.reconciledNext(
-      spark, s"$indexDir/docs.parquet", Seq(grams.toString))
-    writeEpoch(spark, indexDir, next, batch)
-  }
+    * batch's own window counts land as a fresh epoch. Readers sum across
+    * epochs before the duplicate filter, so the result is EXACTLY the
+    * rebuild (addition is the whole merge). Caller dedupes batches
+    * against [[residentDocIds]]. */
+  def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
+    store.append(spark, indexDir, batch)
 
   /** Doc_ids already folded into the index (the streaming anti-join
     * target) — pending deletions excluded. */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    NegEpochs.minus(spark, indexDir,
-      spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct())
+    store.residentDocIds(spark, indexDir)
 
   /** Takedown: subtract the victim documents' own copy-weighted window
-    * counts as a negative epoch ([[NegEpochs]] — the additive arithmetic
-    * reversed); needs the doc ROWS, the gram table is not doc-attributed.
-    * A window duplicated ONLY because of the victim drops below the ≥2
-    * filter immediately — the score a rebuild without the doc produces. */
+    * counts as a negative epoch ([[NegEpochs]]); needs the doc ROWS, the
+    * gram table is not doc-attributed. A window duplicated ONLY because
+    * of the victim drops below the ≥2 filter immediately — the score a
+    * rebuild without the doc produces. */
   def deleteFromIndex(spark: SparkSession, indexDir: String, docRows: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "span-delete") {
-    val v = NegEpochs.victims(spark, indexDir, docRows,
-      spark.read.parquet(s"$indexDir/docs.parquet")).persist()
-    try {
-      if (!v.isEmpty)
-        NegEpochs.writeDeletion(spark, indexDir,
-          Seq("grams.parquet" -> SpanDedup.gramCounts(v)),
-          v.select(col("doc_id")))
-    } finally { v.unpersist(); () }
-  }
+    store.delete(spark, indexDir, docRows)
 
-  /** Fold all epochs into one: counts sum, ledger dedups — exactly the
-    * merge every read already performs ([[EpochCompact]] swap safety).
-    * PENDING DELETIONS are applied with a whole-store swap instead (the
-    * [[NegEpochs]] cross-table-atomic retire; see [[LmIndex.compact]]). */
+  /** Fold all epochs into one ([[CountStore.compact]]). */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "span-compact") {
-    if (NegEpochs.pending(spark, indexDir)) {
-      val g = netGramTotals(spark, indexDir).persist()
-      val rd = residentDocIds(spark, indexDir).persist()
-      try NegEpochs.applyWithSwap(spark, indexDir) { tmp =>
-        g.write.parquet(s"$tmp/grams.parquet/epoch=0")
-        rd.write.parquet(s"$tmp/docs.parquet/epoch=0")
-      } finally { g.unpersist(); rd.unpersist(); () }
-      return
-    }
-    // orphaned counter residue must not fold into the committed epoch=0
-    EpochLedger.dropOrphans(
-      spark, s"$indexDir/docs.parquet", Seq(s"$indexDir/grams.parquet"))
-    EpochCompact.compactTable(spark, s"$indexDir/grams.parquet",
-      _.groupBy(col("gh1"), col("gh2")).agg(sum(col("cnt")).as("cnt")))
-    EpochCompact.compactTable(spark, s"$indexDir/docs.parquet", _.distinct())
-  }
-
-  private def netGramTotals(spark: SparkSession, indexDir: String): DataFrame =
-    NegEpochs.netTotals(spark, indexDir, "grams.parquet",
-      Seq("gh1", "gh2"), Seq("cnt"),
-      spark.read.parquet(s"$indexDir/grams.parquet")
-        .filter(col("epoch") <=
-          EpochLedger.committedMax(spark, s"$indexDir/docs.parquet")))
+    store.compact(spark, indexDir)
 
   /** The duplicated-gram set served by the index: counts summed across
     * ALL epochs (net of committed deletions), then filtered — never
     * per-epoch. */
   def dupGrams(spark: SparkSession, indexDir: String): DataFrame =
-    netGramTotals(spark, indexDir)
+    store.totals(spark, indexDir, Grams)
       .filter(col("cnt") >= 2)
       .select(col("gh1"), col("gh2"))
 

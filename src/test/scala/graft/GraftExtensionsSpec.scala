@@ -22,4 +22,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
       org.apache.spark.unsafe.types.UTF8String.fromString("a b c")))
     assert(r.getInt(3) === graft.functions.MinHash.NumPerms)
   }
+
+  test("injected builders construct resolvable expressions") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ts = graft.functions.ParseTimestampExpr(Literal("20190101013449+0000"))
+    assert(ts.eval(null) === 1546306489000000L) // 2019-01-01T01:34:49Z micros
+    val d = graft.functions.ParseDateExpr(Literal("01-FEB-19"))
+    assert(d.eval(null) === java.time.LocalDate.of(2019, 2, 1).toEpochDay.toInt)
+  }
 }

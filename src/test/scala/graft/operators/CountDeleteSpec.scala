@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -9,7 +9,8 @@ import graft.SparkTestSession
   * arithmetic run in reverse. Per family: immediate serve-path parity
   * with a rebuild that never saw the doc, replayed-takedown no-op,
   * shadowed re-append, and the deletion-applying compact (whole-store
-  * swap) after which re-insertion is a normal append. */
+  * swap) after which re-insertion is a normal append. Every family also
+  * runs the append crash window of the [[EpochLedger]] protocol. */
 class CountDeleteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -70,35 +71,6 @@ class CountDeleteSpec extends AnyFunSuite {
     LmIndex.deleteFromModel(spark, full, dup)
     val probe = Seq((10L, "a b a")).toDF("doc_id", "text")
     assert(lmScores(full, probe) === lmScores(rebuilt, probe))
-  }
-
-  test("LmIndex: append crash window (counters without their ledger twin) " +
-      "neither skews reads nor double-counts on replay; a compact in the " +
-      "window reconciles the residue instead of folding it") {
-    val base = tmp("graft-lmcrash")
-    val idx = s"$base/idx"
-    LmIndex.buildModel(spark, lmCorpus.filter(col("doc_id") =!= 3L), idx)
-    def totals(d: String) = LmIndex.pairTotals(spark, d)
-      .collect().map(_.toSeq).toSet
-    val before = totals(idx)
-    val batch = lmCorpus.filter(col("doc_id") === 3L)
-    LmIndex.appendToModel(spark, idx, batch)
-    // simulate the crash BETWEEN the counter renames and the ledger
-    // rename: pairs/prefix epoch=1 committed, docs epoch=1 absent
-    for (t <- Seq("docs")) {
-      val p = new org.apache.hadoop.fs.Path(s"$idx/$t.parquet/epoch=1")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    // reads skip the uncommitted residue
-    assert(totals(idx) === before)
-    // a compact in the window must NOT fold the residue into epoch=0
-    LmIndex.compact(spark, idx)
-    assert(totals(idx) === before)
-    // the replayed batch lands exactly once
-    LmIndex.appendToModel(spark, idx, batch)
-    val oneShot = s"$base/oneshot"
-    LmIndex.buildModel(spark, lmCorpus, oneShot)
-    assert(totals(idx) === totals(oneShot))
   }
 
   // --- ClassifyIndex -------------------------------------------------------
@@ -162,4 +134,96 @@ class CountDeleteSpec extends AnyFunSuite {
     DsirIndex.buildIndex(spark, docs, restored)
     assert(totals(full) === totals(restored))
   }
+
+  // --- append crash window, every count family ------------------------------
+
+  /** One count family as the crash-window case drives it: its counter
+    * tables, a corpus whose doc 3 is the appended batch, its public
+    * lifecycle, and its served totals. */
+  private case class CountFamily(
+      name: String, counterTables: Seq[String], corpus: () => DataFrame,
+      build: (DataFrame, String) => Unit,
+      append: (String, DataFrame) => Unit,
+      compact: String => Unit,
+      resident: String => DataFrame,
+      totals: String => Set[Seq[Any]])
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  // doc_id % 5 != 0: all three in the classifier's train split
+  private def clfDocs = Seq(
+    (1L, "en", "alpha beta alpha"),
+    (2L, "de", "gamma delta"),
+    (3L, "en", "alpha epsilon")).toDF("doc_id", "lang", "text")
+
+  private def dsirDocs = Seq(
+    (1L, "alpha beta alpha", "en"),
+    (2L, "gamma delta", "de"),
+    (3L, "epsilon zeta", "en")).toDF("doc_id", "text", "lang")
+
+  // r1..r8 occurs once in the resident corpus and once in the batch (a
+  // duplicate only when the batch lands); c0 r1..r7 occurs only in the
+  // batch (a duplicate only if the batch lands twice)
+  private def spanDocs = Seq(
+    (1L, "r1 r2 r3 r4 r5 r6 r7 r8 a1 a2"),
+    (2L, "b1 b2 b3 b4 b5 b6 b7 b8 b9 b1 b2 b3 b4 b5 b6 b7 b8 b9"),
+    (3L, "c0 r1 r2 r3 r4 r5 r6 r7 r8 c1")).toDF("doc_id", "text")
+
+  private val countFamilies = Seq(
+    CountFamily("LmIndex", Seq("pairs.parquet", "prefix.parquet"), () => lmCorpus,
+      (docs, d) => LmIndex.buildModel(spark, docs, d),
+      (d, b) => LmIndex.appendToModel(spark, d, b),
+      d => LmIndex.compact(spark, d),
+      d => LmIndex.residentDocIds(spark, d),
+      d => rowSet(LmIndex.pairTotals(spark, d)) ++ rowSet(LmIndex.prefixTotals(spark, d))),
+    CountFamily("SpanIndex", Seq("grams.parquet"), () => spanDocs,
+      (docs, d) => SpanIndex.buildIndex(spark, docs, d),
+      (d, b) => SpanIndex.appendToIndex(spark, d, b),
+      d => SpanIndex.compact(spark, d),
+      d => SpanIndex.residentDocIds(spark, d),
+      d => rowSet(SpanIndex.dupGrams(spark, d))),
+    CountFamily("ClassifyIndex", Seq("counts.parquet"), () => clfDocs,
+      (docs, d) => ClassifyIndex.buildModel(spark, docs, d),
+      (d, b) => ClassifyIndex.appendToModel(spark, d, b),
+      d => ClassifyIndex.compact(spark, d),
+      d => ClassifyIndex.residentDocIds(spark, d),
+      d => rowSet(ClassifyIndex.modelCounts(spark, d))),
+    CountFamily("DsirIndex", Seq("buckets.parquet"), () => dsirDocs,
+      (docs, d) => DsirIndex.buildIndex(spark, docs, d),
+      (d, b) => DsirIndex.appendToIndex(spark, d, b),
+      d => DsirIndex.compact(spark, d),
+      d => DsirIndex.residentDocIds(spark, d),
+      d => rowSet(DsirIndex.bucketTotals(spark, d))))
+
+  for (f <- countFamilies)
+    test(s"${f.name}: append crash window (counters without their ledger twin) " +
+        "neither skews reads nor double-counts on replay; a compact in the " +
+        "window reconciles the residue instead of folding it") {
+      val base = tmp(s"graft-crash-${f.name}")
+      val idx = s"$base/idx"
+      val batch = f.corpus().filter(col("doc_id") === 3L)
+      f.build(f.corpus().filter(col("doc_id") =!= 3L), idx)
+      val before = f.totals(idx)
+      val residentBefore = rowSet(f.resident(idx))
+      f.append(idx, batch)
+      // simulate the crash BETWEEN the counter renames and the ledger
+      // rename: counter epoch=1 committed, docs epoch=1 absent
+      val ledger = new org.apache.hadoop.fs.Path(s"$idx/docs.parquet/epoch=1")
+      ledger.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ledger, true)
+      for (t <- f.counterTables)
+        assert(new java.io.File(s"$idx/$t/epoch=1").exists(), s"$t residue")
+      // reads skip the uncommitted residue
+      assert(f.totals(idx) === before)
+      assert(rowSet(f.resident(idx)) === residentBefore)
+      // a compact in the window must NOT fold the residue into epoch=0
+      f.compact(idx)
+      assert(f.totals(idx) === before)
+      // the replayed batch lands exactly once
+      f.append(idx, batch)
+      val oneShot = s"$base/oneshot"
+      f.build(f.corpus(), oneShot)
+      assert(f.totals(oneShot) !== before, "the batch must move the served counts")
+      assert(f.totals(idx) === f.totals(oneShot))
+      assert(rowSet(f.resident(idx)) === rowSet(f.resident(oneShot)))
+    }
 }

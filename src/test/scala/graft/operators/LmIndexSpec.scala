@@ -96,4 +96,61 @@ class LmIndexSpec extends AnyFunSuite {
       spark, modelDir, Seq(docs(2)).toDF("doc_id", "text"))
     assert(epochs === before)
   }
+
+  test("v1 store (no prefix.parquet): prefix fallback, catch-up append and " +
+      "compact with and without a pending deletion serve the one-shot totals") {
+    val corpus = Seq(
+      (1L, "a b c a b"), (2L, "a b a b"), (3L, "x y z"), (4L, "a c a b"))
+      .toDF("doc_id", "text")
+    val base = Files.createTempDirectory("graft-lm-v1").toString
+    def totals(d: String) = (
+      LmIndex.pairTotals(spark, d).collect().map(_.toSeq).toSet,
+      LmIndex.prefixTotals(spark, d).collect().map(_.toSeq).toSet)
+    def oneShot(name: String, docs: org.apache.spark.sql.DataFrame) = {
+      val d = s"$base/$name"
+      LmIndex.buildModel(spark, docs, d)
+      totals(d)
+    }
+    def dropPrefix(d: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(s"$d/prefix.parquet")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      assert(!new java.io.File(s"$d/prefix.parquet").exists())
+    }
+    def epochs(d: String, t: String) = new java.io.File(s"$d/$t").listFiles()
+      .map(_.getName).filter(_.startsWith("epoch=")).sorted.toSeq
+    val a = corpus.filter(col("doc_id") <= 2L)
+    val b = corpus.filter(col("doc_id") > 2L)
+    val wantA = oneShot("ref-a", a)
+    val wantAll = oneShot("ref-all", corpus)
+    assert(wantA !== wantAll)
+
+    // read fallback: prefix totals re-aggregated from the pairs
+    val v1 = s"$base/v1"
+    LmIndex.buildModel(spark, a, v1)
+    dropPrefix(v1)
+    assert(totals(v1) === wantA)
+    // append: the catch-up epoch, then the batch's own epoch
+    LmIndex.appendToModel(spark, v1, b)
+    assert(epochs(v1, "prefix.parquet") === Seq("epoch=0", "epoch=1"))
+    assert(totals(v1) === wantAll)
+
+    // compact of a v1 store without pending deletions
+    dropPrefix(v1)
+    LmIndex.compact(spark, v1)
+    assert(epochs(v1, "pairs.parquet") === Seq("epoch=0"))
+    assert(epochs(v1, "prefix.parquet") === Seq("epoch=0"))
+    assert(totals(v1) === wantAll)
+
+    // compact of a v1 store with a pending deletion
+    val wantNo2 = oneShot("ref-no2", corpus.filter(col("doc_id") =!= 2L))
+    val v1d = s"$base/v1d"
+    LmIndex.buildModel(spark, corpus, v1d)
+    dropPrefix(v1d)
+    LmIndex.deleteFromModel(spark, v1d, corpus.filter(col("doc_id") === 2L))
+    assert(totals(v1d) === wantNo2)
+    LmIndex.compact(spark, v1d)
+    assert(!new java.io.File(s"$v1d/dels.parquet").exists())
+    assert(epochs(v1d, "prefix.parquet") === Seq("epoch=0"))
+    assert(totals(v1d) === wantNo2)
+  }
 }
