@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,11 +15,12 @@ private[operators] final case class CountTable(
   * function from a document batch to that batch's counter frames, in
   * table order — and the store owns everything else:
   *
-  *  - build/append write the counters of a batch as a fresh epoch,
-  *    counters FIRST and the `docs.parquet` ledger SECOND — the ledger
-  *    rename is the commit point of the [[EpochLedger]] protocol, the
-  *    next epoch derives from the ledger, and orphaned counter residue
-  *    is reconciled away before the write;
+  *  - build/append write the counters of a batch as a fresh epoch
+  *    through the write path it shares with [[TombstoneStore]]
+  *    ([[EpochLedger.build]]/[[EpochLedger.append]]): counters FIRST and
+  *    the `docs.parquet` ledger LAST — the ledger rename is the commit
+  *    point, the next epoch derives from the ledger, and orphaned
+  *    counter residue is reconciled away before the write;
   *  - an append anti-joins the deletion ledger first ([[NegEpochs]]
   *    shadow semantics: a doc with a pending deletion stays dead);
   *  - delete writes the victims' own counts as a negative epoch
@@ -38,8 +38,10 @@ private[operators] final case class CountTable(
   * its frames share (LM's one pair-count pass feeds both of its tables);
   * every returned frame is unpersisted once its epoch is published.
   *
-  * Two epoch-partitioned families keep their own lifecycle, because
-  * their merges are not a per-counter sum:
+  * The doc-keyed row stores (Eval, Pack, Winnow, Search) are
+  * [[TombstoneStore]]s: their deletions are tombstones, not negative
+  * epochs. Two epoch-partitioned count families keep their own
+  * lifecycle, because their merges are not a per-counter sum:
   *  - [[SketchIndex]]: a pruning bottom-K sample merge, a count table
   *    merged through an XOR digest of the counted doc_ids, and an epoch
   *    number derived from the table listing, not from the ledger;
@@ -50,40 +52,26 @@ private[operators] final class CountStore(
     family: String, tables: Seq[CountTable],
     counts: DataFrame => Seq[DataFrame]) {
 
-  private def ledger(dir: String) = s"$dir/docs.parquet"
+  private def ledger(dir: String) = s"$dir/${EpochLedger.Ledger}"
   private def tableDirs(dir: String) = tables.map(t => s"$dir/${t.name}")
+  private val layout =
+    (tables.map(_.name) :+ EpochLedger.Ledger).map(EpochTable(_, Nil))
 
   private def batchCounts(docs: DataFrame): Seq[(String, DataFrame)] =
     tables.map(_.name).zip(counts(docs))
 
-  private def writeEpoch(
-      spark: SparkSession, dir: String, epoch: Int, docs: DataFrame): Unit = {
-    val counters = batchCounts(docs)
-    try
-      for ((tab, df) <- counters :+ ("docs.parquet" -> docs.select(col("doc_id")).distinct()))
-        AtomicPublish.stageAndRename(
-          spark, s"$dir/$tab", s".epoch-$epoch.tmp", s"epoch=$epoch") {
-          tmp => df.write.mode("overwrite").parquet(tmp.toString)
-        }
-    finally counters.foreach(_._2.unpersist())
-  }
+  private def frames(docs: DataFrame): Seq[DataFrame] =
+    counts(docs) :+ docs.select(col("doc_id")).distinct()
 
   /** Build (overwrite) the store as epoch 0. */
   def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    StoreLock.withLock(spark, dir, s"$family-build") {
-      val root = new Path(dir)
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-      writeEpoch(spark, dir, 0, docs)
-    }
+    EpochLedger.build(spark, dir, family, layout)(frames(docs))
 
   /** Fold a batch in as a fresh epoch — O(batch). Caller dedupes the
     * batch against [[residentDocIds]]. */
-  def append(spark: SparkSession, dir: String, batch0: DataFrame): Unit =
-    StoreLock.withLock(spark, dir, s"$family-append") {
-      val batch = NegEpochs.minus(spark, dir, batch0)
-      val next = EpochLedger.reconciledNext(spark, ledger(dir), tableDirs(dir))
-      writeEpoch(spark, dir, next, batch)
-    }
+  def append(spark: SparkSession, dir: String, batch: DataFrame): Unit =
+    EpochLedger.append(spark, dir, family, layout)(
+      frames(NegEpochs.minus(spark, dir, batch)))
 
   /** Doc_ids already folded in (the streaming anti-join target) —
     * pending deletions excluded. */

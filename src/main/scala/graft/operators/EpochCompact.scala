@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Epoch compaction for the ADDITIVE persisted-index tables (the count
-  * models' counter tables through [[CountStore.compact]], plus the
-  * per-family folds of [[PqIndex]], [[SketchIndex]], [[TokenizerIndex]]
-  * and the other epoch stores): a streaming-maintenance cadence accretes
+  * models' counter tables through [[CountStore.compact]], the tombstone
+  * families' tables through [[TombstoneStore.compact]], plus the
+  * per-family folds of [[PqIndex]], [[SketchIndex]] and
+  * [[TokenizerIndex]]): a streaming-maintenance cadence accretes
   * one epoch dir per micro-batch, and every read re-merges all of them —
   * compaction folds the union into ONE `epoch=0` table whose
   * summed/deduplicated content is byte-equivalent to what readers were

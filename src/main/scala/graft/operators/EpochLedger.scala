@@ -1,37 +1,45 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe epoch commit for the counter+ledger table PAIRS — the
-  * count models through [[CountStore]] (which owns their whole
-  * lifecycle), [[TokenizerIndex]] stats+docs, and the [[NegEpochs]]
-  * deletion ledger: each append publishes one rename per counter table
-  * and then the ledger's, and the window between them used to break
-  * replay idempotence — the counters committed but the ledger
-  * didn't, so the documented replay anti-join re-appended the same batch
-  * and DOUBLE-COUNTED the additive counters (set-valued stores are
-  * replay-idempotent by dedup; counters are not).
+/** A table's place in an epoch write: its directory under the store and
+  * the columns its epoch dirs are partitioned by (on-disk layout —
+  * [[SearchIndex]]'s `tbucket`). */
+private[operators] final case class EpochTable(name: String, partitionBy: Seq[String])
+
+/** Crash-safe epoch commit for the stores whose tables commit through a
+  * `docs.parquet` ledger — the count models through [[CountStore]] and
+  * the tombstone families (Eval, Pack, Winnow, Search) through
+  * [[TombstoneStore]], which share ONE write path here ([[build]],
+  * [[append]], [[writeEpoch]]); [[TokenizerIndex]] stats+docs and the
+  * [[NegEpochs]] deletion ledger follow the same rules by hand. Each
+  * append publishes one rename per table and then the ledger's, and the
+  * window between them used to break replay idempotence — the tables
+  * committed but the ledger didn't, so the documented replay anti-join
+  * re-appended the same batch and DOUBLE-COUNTED the additive counters
+  * (and shifted Pack's offsets twice: its append reads the resident
+  * per-source base).
   *
   * The discipline, shared so the stores can't drift apart:
   *
-  *  - the LEDGER rename is the commit point: counters epoch first,
-  *    ledger epoch second;
-  *  - the next epoch number derives from the LEDGER, not the counter
-  *    table ([[reconciledNext]]);
-  *  - a counter epoch ≥ the ledger-derived next is the residue of a
-  *    crash between the two renames — [[reconciledNext]] deletes it
+  *  - the LEDGER rename is the commit point: table epochs first,
+  *    ledger epoch last;
+  *  - the next epoch number derives from the LEDGER, not a table
+  *    ([[reconciledNext]]);
+  *  - a table epoch ≥ the ledger-derived next is the residue of a
+  *    crash between the renames — [[reconciledNext]] deletes it
   *    before the rewrite, so the replayed batch lands exactly once;
-  *  - reads of the counter table skip uncommitted epochs by filtering
+  *  - reads of the counter tables skip uncommitted epochs by filtering
   *    the epoch partition column to ≤ the ledger max
   *    ([[committedMax]]) — the residue never reaches served arithmetic
   *    even before the repairing replay arrives;
-  *  - compaction must fold the COUNTER table before the ledger (both
-  *    fold to `epoch=0` via [[EpochCompact]]'s swap): a crash between
-  *    the two folds then leaves counter epochs ≤ ledger epochs, which
-  *    the rules above already tolerate. Folding the ledger first would
-  *    let the next append's reconcile mistake the folded counter table
-  *    for crash residue and destroy it.
+  *  - compaction drops orphans ([[dropOrphans]]) and must fold every
+  *    table before the ledger (all fold to `epoch=0` via
+  *    [[EpochCompact]]'s swap): a crash between the folds then leaves
+  *    table epochs ≤ ledger epochs, which the rules above already
+  *    tolerate. Folding the ledger first would let the next append's
+  *    reconcile mistake a folded table for crash residue and destroy it.
   */
 private[operators] object EpochLedger {
 
@@ -72,4 +80,47 @@ private[operators] object EpochLedger {
     reconciledNext(spark, ledgerDir, counterDirs)
     ()
   }
+
+  /** The commit-point table of every ledger-committed store. */
+  val Ledger = "docs.parquet"
+
+  /** Publish one epoch: each table's frame is staged and renamed in
+    * `tables` order, the [[Ledger]] LAST (its rename commits the epoch).
+    * Every frame is unpersisted once the epoch is published, so a frames
+    * function may persist what its frames share. */
+  def writeEpoch(
+      spark: SparkSession, dir: String, epoch: Int,
+      tables: Seq[EpochTable], frames: Seq[DataFrame]): Unit = {
+    require(tables.lastOption.exists(_.name == Ledger), s"$Ledger must publish last")
+    try
+      for ((t, df) <- tables.zip(frames))
+        AtomicPublish.stageAndRename(
+          spark, s"$dir/${t.name}", s".epoch-$epoch.tmp", s"epoch=$epoch") {
+          tmp => df.write.mode("overwrite").partitionBy(t.partitionBy: _*)
+            .parquet(tmp.toString)
+        }
+    finally frames.foreach(_.unpersist())
+  }
+
+  /** Build (overwrite) the store as epoch 0 under the store lock. */
+  def build(
+      spark: SparkSession, dir: String, family: String, tables: Seq[EpochTable])(
+      frames: => Seq[DataFrame]): Unit =
+    StoreLock.withLock(spark, dir, s"$family-build") {
+      val root = new Path(dir)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+      writeEpoch(spark, dir, 0, tables, frames)
+    }
+
+  /** Append a batch as the ledger-derived next epoch. Crash residue is
+    * reconciled away FIRST and `frames` computed only after, so a frame
+    * that reads the store (Pack's resident base) never sees residue. */
+  def append(
+      spark: SparkSession, dir: String, family: String, tables: Seq[EpochTable])(
+      frames: => Seq[DataFrame]): Unit =
+    StoreLock.withLock(spark, dir, s"$family-append") {
+      val next = reconciledNext(
+        spark, s"$dir/$Ledger", tables.init.map(t => s"$dir/${t.name}"))
+      writeEpoch(spark, dir, next, tables, frames)
+    }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,64 +15,51 @@ import org.apache.spark.sql.functions._
   * State is a plain row set (distinct shingles per epoch): append is
   * O(batch) over NEW eval docs only (ledger anti-join), the read-merge
   * is `distinct`, duplicate epochs are invariant by construction, and
-  * compaction folds to one epoch with [[EpochCompact]]'s swap. The
+  * compaction folds to one epoch ([[TombstoneStore]]). The
   * shingle definition is [[TextOps.evalShinglesOf]] — the SAME builder
   * the inline lane uses, so "what counts as a leak" cannot drift
   * between the batch, indexed, and streaming lanes.
   *
-  * Layout under `indexDir` (family conventions):
-  *  - `shingles.parquet/epoch=K`: (shingle) — the epoch's distinct set
+  * Layout under `indexDir` (a [[TombstoneStore]]):
+  *  - `shingles.parquet/epoch=K`: (doc_id, shingle) — the epoch's
+  *    distinct doc-attributed shingles
   *  - `docs.parquet/epoch=K`:     (doc_id) — replay-safe ledger
   */
 object EvalIndex {
 
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    for ((tab, df) <- Seq(
-        // v2: shingles carry their contributing doc_id, so a takedown can
-        // remove exactly one eval doc's contribution while shingles other
-        // eval docs still carry survive (the read distinct()s them away)
-        "shingles.parquet" -> TextOps.evalDocShinglesOf(docs),
-        "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-      AtomicPublish.stageAndRename(
-        spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-        tmp => df.write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-  }
+  private val store = new TombstoneStore("eval", Seq(
+    // v2: shingles carry their contributing doc_id, so a takedown can
+    // remove exactly one eval doc's contribution while shingles other
+    // eval docs still carry survive (the read distinct()s them away)
+    TombstoneTable("shingles.parquet", Nil, Fold.Rows),
+    TombstoneTable(EpochLedger.Ledger, Nil, Fold.Rows)),
+    // written (doc_id, shingle)-unique, so the single-epoch read in
+    // [[docShingles]] holds by construction even for a batch that
+    // carries a doc twice
+    docs => Seq(TextOps.evalDocShinglesOf(docs).distinct(),
+      docs.select(col("doc_id")).distinct()))
 
   /** Build (overwrite) the vocabulary as epoch 0. */
   def buildIndex(spark: SparkSession, evalDocs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "eval-build") {
-    val root = new Path(indexDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-    writeEpoch(spark, indexDir, 0, evalDocs)
-  }
+    store.build(spark, evalDocs, indexDir)
 
   /** Fold a batch of new eval documents in — O(batch); caller dedupes
     * against [[residentDocIds]]. */
   def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "eval-append") {
-    val sh = new Path(indexDir, "shingles.parquet")
-    val fs = sh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = fs.listStatus(sh).map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toInt).max + 1
-    writeEpoch(spark, indexDir, next, batch)
-  }
+    store.append(spark, indexDir, batch)
 
   /** Eval doc_ids already folded in (the streaming anti-join target) —
     * tombstoned docs stay here until compaction, the family's shadowing
     * semantics (a deleted eval doc re-arriving stays dead). */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct()
+    store.residentDocIds(spark, indexDir)
 
   /** Takedown: tombstone the eval doc — O(ids). Its shingle rows vanish
     * from the served vocabulary immediately, but a shingle ANOTHER eval
     * doc also carries survives the doc-attributed anti-join — exactly
     * the vocabulary a rebuild without the doc produces. */
   def deleteFromIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit =
-    Tombstones.delete(spark, indexDir, ids, "doc_id")
+    store.delete(spark, indexDir, ids)
 
   /** Doc-attributed served rows (doc_id, shingle) — tombstone-excluded,
     * distinct read-merge, so duplicate epochs and the compaction publish
@@ -83,8 +69,8 @@ object EvalIndex {
   def docShingles(spark: SparkSession, indexDir: String): DataFrame = {
     val live = s"$indexDir/shingles.parquet"
     // single-epoch fast path (round 17, §2.4): each epoch's rows are
-    // (doc_id, shingle)-unique by the write invariant (array_distinct
-    // per doc at build/append; compact folds to one epoch), so with no
+    // (doc_id, shingle)-unique by the write invariant (the frame is
+    // written distinct; compact folds to one epoch), so with no
     // pending tombstones the dedup-distinct — which exists to absorb
     // double-appended crash-window epochs — would shuffle the whole
     // store to change nothing
@@ -102,18 +88,9 @@ object EvalIndex {
   def shingles(spark: SparkSession, indexDir: String): DataFrame =
     docShingles(spark, indexDir).select(col("shingle")).distinct()
 
-  /** Fold all epochs into one — the read-merge, made durable; tombstoned
-    * docs fold out of both tables, then the SNAPSHOT's tombstone epochs
-    * retire (a takedown racing the compact stays pending). */
+  /** Fold all epochs into one ([[TombstoneStore.compact]]). */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "eval-compact") {
-    val ts = Tombstones.snapshot(spark, indexDir)
-    EpochCompact.compactTable(spark, s"$indexDir/shingles.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    EpochCompact.compactTable(spark, s"$indexDir/docs.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    ts.clear(spark)
-  }
+    store.compact(spark, indexDir)
 
   // --- q_decontaminate_indexed: the persisted-vocabulary lane ------------
   private def indexDirFor(dir: String): String = {

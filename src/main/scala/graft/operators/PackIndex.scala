@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +24,7 @@ import org.apache.spark.sql.functions._
   * order, exactly the [[graft.streaming.EmbedStream]] SemDeDup
   * eager-semantics discipline.
   *
-  * Layout under `indexDir` (family conventions: epoch-partitioned,
+  * Layout under `indexDir` (a [[TombstoneStore]]: epoch-partitioned,
   * dot-prefixed staging, one rename per table per publish):
   *  - `manifest.parquet/epoch=K`: (doc_id, source, n_toks, start_tok,
   *    end_tok) — the batch's absolute offsets
@@ -39,57 +38,43 @@ object PackIndex {
     * source of truth for the pack arithmetic. */
   private def WinTokens: Long = PackingOps.WinTokensVal
 
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, manifest: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    val m = manifest.persist()
-    try {
-      for ((tab, df) <- Seq(
-          "manifest.parquet" -> m,
-          "base.parquet" -> m.groupBy(col("source")).agg(sum(col("n_toks")).as("btot")),
-          "docs.parquet" -> m.select(col("doc_id")).distinct())) {
-        AtomicPublish.stageAndRename(
-          spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-          tmp => df.write.mode("overwrite").parquet(tmp.toString)
-        }
-      }
-    } finally { m.unpersist(); () }
-  }
+  private val store = new TombstoneStore("pack", Seq(
+    TombstoneTable("manifest.parquet", Nil, Fold.Rows),
+    // base keeps counting tombstoned tokens — see [[deleteFromIndex]]
+    TombstoneTable("base.parquet", Nil, Fold.SumBy("source", "btot")),
+    TombstoneTable(EpochLedger.Ledger, Nil, Fold.Rows)),
+    manifest => {
+      val m = manifest.persist()
+      Seq(m, m.groupBy(col("source")).agg(sum(col("n_toks")).as("btot")),
+        m.select(col("doc_id")).distinct())
+    })
 
   /** Build (overwrite) the manifest as epoch 0 — the one-shot
     * [[PackingOps.offsets]] scan. */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "pack-build") {
-    val root = new Path(indexDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-    writeEpoch(spark, indexDir, 0, PackingOps.offsets(docs))
-  }
+    store.build(spark, PackingOps.offsets(docs), indexDir)
 
   /** Fold a batch of new documents in: the batch runs its OWN two-level
     * scan (O(batch)) and shifts by the resident per-source base — one
-    * broadcast join, never a corpus re-scan. Caller dedupes batches
-    * against [[residentDocIds]]. */
+    * broadcast join, never a corpus re-scan. The base is read after the
+    * append reconciled crash residue away, so a replayed batch shifts
+    * once. Caller dedupes batches against [[residentDocIds]]. */
   def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
-    StoreLock.withLock(spark, indexDir, "pack-append") {
-    val manifest = new Path(indexDir, "manifest.parquet")
-    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = fs.listStatus(manifest).map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toInt).max + 1
-    val base = spark.read.parquet(s"$indexDir/base.parquet")
-      .groupBy(col("source")).agg(sum(col("btot")).as("base"))
-    val shifted = PackingOps.offsets(batch)
-      .join(broadcast(base), Seq("source"), "left")
-      .select(col("doc_id"), col("source"), col("n_toks"),
-        (col("start_tok") + coalesce(col("base"), lit(0L))).as("start_tok"),
-        (col("end_tok") + coalesce(col("base"), lit(0L))).as("end_tok"))
-    writeEpoch(spark, indexDir, next, shifted)
-  }
+    store.append(spark, indexDir, {
+      val base = spark.read.parquet(s"$indexDir/base.parquet")
+        .groupBy(col("source")).agg(sum(col("btot")).as("base"))
+      PackingOps.offsets(batch)
+        .join(broadcast(base), Seq("source"), "left")
+        .select(col("doc_id"), col("source"), col("n_toks"),
+          (col("start_tok") + coalesce(col("base"), lit(0L))).as("start_tok"),
+          (col("end_tok") + coalesce(col("base"), lit(0L))).as("end_tok"))
+    })
 
   /** Doc_ids already packed (the streaming anti-join target) —
     * tombstoned docs stay here until compaction, the family's shadowing
     * semantics (a deleted doc re-arriving stays dead). */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct()
+    store.residentDocIds(spark, indexDir)
 
   /** Takedown: MANIFEST HOLES. The tombstoned documents' windows vanish
     * from every read immediately (the training loader skips the hole);
@@ -100,24 +85,14 @@ object PackIndex {
     * TAIL POSITION, not the resident token sum, and deletion makes the
     * two diverge by exactly the holes' n_toks. O(ids). */
   def deleteFromIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit =
-    Tombstones.delete(spark, indexDir, ids, "doc_id")
+    store.delete(spark, indexDir, ids)
 
-  /** Fold all epochs into one — manifests union (offsets are absolute,
-    * rows dedupe), base totals sum ([[EpochCompact]] swap safety);
+  /** Fold all epochs into one ([[TombstoneStore.compact]]) — manifests
+    * union (offsets are absolute, rows dedupe), base totals sum;
     * tombstoned docs fold out of the manifest and the ledger (base keeps
-    * the tail position — see [[deleteFromIndex]]), then the tombstones
-    * retire. Pending tombstones force the fold even at one epoch. */
+    * the tail position — see [[deleteFromIndex]]). */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "pack-compact") {
-    val ts = Tombstones.snapshot(spark, indexDir)
-    EpochCompact.compactTable(spark, s"$indexDir/manifest.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    EpochCompact.compactTable(spark, s"$indexDir/base.parquet",
-      _.groupBy(col("source")).agg(sum(col("btot")).as("btot")))
-    EpochCompact.compactTable(spark, s"$indexDir/docs.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    ts.clear(spark)
-  }
+    store.compact(spark, indexDir)
 
   /** The served per-document manifest: the q_pack_chunks shape (window
     * spans derived from the stored absolute offsets), tombstone-excluded. */

@@ -28,28 +28,17 @@ import org.apache.spark.sql.functions._
 object PqIndex {
   import SimilarityOps._
 
-  private def writeTable(
-      spark: SparkSession, root: Path, tab: String, sub: String, df: DataFrame): Unit = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(root, s"$tab/$sub")
-    val tmp = new Path(root, s"$tab/.${sub.replace('/', '-')}.tmp")
-    fs.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(live, true)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"pq index publish failed: $tmp -> $live")
-  }
-
   private def writeEpoch(
       spark: SparkSession, indexDir: String, epoch: Int, en: DataFrame,
-      cb: Seq[((Int, Long), Seq[Double])]): Unit = {
-    val root = new Path(indexDir)
-    writeTable(spark, root, "codes.parquet", s"epoch=$epoch", pqCodesOf(en, cb))
-    writeTable(spark, root, "vecs.parquet", s"epoch=$epoch",
-      en.select(col("vec_id"), col("v"), col("norm")))
-    writeTable(spark, root, "ids.parquet", s"epoch=$epoch",
-      en.select(col("vec_id")).distinct())
-  }
+      cb: Seq[((Int, Long), Seq[Double])]): Unit =
+    for ((tab, df) <- Seq(
+        "codes.parquet" -> pqCodesOf(en, cb),
+        "vecs.parquet" -> en.select(col("vec_id"), col("v"), col("norm")),
+        "ids.parquet" -> en.select(col("vec_id")).distinct()))
+      AtomicPublish.stageAndRename(
+        spark, s"$indexDir/$tab", s".epoch-$epoch.tmp", s"epoch=$epoch") {
+        tmp => df.write.mode("overwrite").parquet(tmp.toString)
+      }
 
   /** Train (overwrite) the index: codebook learned on `raw` unless a
     * frozen one is supplied (the append≡rebuild spec's reference path). */
@@ -63,8 +52,11 @@ object PqIndex {
     val en = pqNormalize(raw)
     val cb = codebook.getOrElse(pqTrainCodebook(en))
     import spark.implicits._
-    writeTable(spark, root, "codebook.parquet", "data",
-      cb.map { case ((m, c), cv) => (m, c, cv) }.toDF("m", "cluster", "cv"))
+    AtomicPublish.stageAndRename(
+      spark, s"$indexDir/codebook.parquet", ".data.tmp", "data") {
+      tmp => cb.map { case ((m, c), cv) => (m, c, cv) }.toDF("m", "cluster", "cv")
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
     writeEpoch(spark, indexDir, 0, en, cb)
   }
 

@@ -30,10 +30,14 @@ import org.apache.spark.sql.types.LongType
   * counts bounded while making the worst-case keyword read 1/64 of the
   * store (typical: k buckets).
   *
-  * Layout under `indexDir` (family conventions: epoch-partitioned,
-  * dot-prefixed staging, one rename per table per publish):
+  * Layout under `indexDir` (a [[TombstoneStore]]: epoch-partitioned,
+  * dot-prefixed staging, one rename per table per publish, in this
+  * order):
   *  - `postings.parquet/epoch=K/tbucket=B`: (doc_id, term, tf)
-  *  - `docs.parquet/epoch=K`: (doc_id) — replay-safe membership ledger
+  *  - `term_df.parquet/epoch=K`: (term, df) — the epoch's per-term doc
+  *    counts
+  *  - `docs.parquet/epoch=K`: (doc_id, dl) — replay-safe membership
+  *    ledger with each doc's token count
   */
 object SearchIndex {
 
@@ -47,47 +51,29 @@ object SearchIndex {
       .agg(count(lit(1)).as("tf"))
       .withColumn("tbucket", pmod(xxhash64(col("term")), lit(TBuckets)))
 
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    AtomicPublish.stageAndRename(
-      spark, new Path(root, "postings.parquet").toString,
-      s".epoch-$epoch.tmp", s"epoch=$epoch") { tmp =>
-      postingsOf(docs).write.mode("overwrite")
-        .partitionBy("tbucket").parquet(tmp.toString)
-    }
-    AtomicPublish.stageAndRename(
-      spark, new Path(root, "term_df.parquet").toString,
-      s".epoch-$epoch.tmp", s"epoch=$epoch") { tmp =>
+  // the folds describe the tables; [[compact]] runs them itself, keeping
+  // the tbucket layout and the term_df backfill
+  private val store = new TombstoneStore("search", Seq(
+    TombstoneTable("postings.parquet", Seq("tbucket"), Fold.Rows),
+    TombstoneTable("term_df.parquet", Nil,
+      Fold.Derived((spark, indexDir) => _ => foldedTermDf(spark, indexDir))),
+    TombstoneTable(EpochLedger.Ledger, Nil, Fold.Rows)),
+    docs => Seq(postingsOf(docs),
       // the batch's per-term doc counts — the persisted half of the
       // hybrid lane's df cap, so serving never re-aggregates the whole
-      // postings store ([[termDfFromStore]] for merge + crash rules);
-      // written BEFORE the docs ledger, whose rename is the commit point
-      postingsOf(docs).groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-    AtomicPublish.stageAndRename(
-      spark, new Path(root, "docs.parquet").toString,
-      s".epoch-$epoch.tmp", s"epoch=$epoch") { tmp =>
+      // postings store ([[termDfFromStore]] for merge + crash rules)
+      postingsOf(docs).groupBy(col("term")).agg(count(lit(1)).as("df")),
       // the ledger carries each doc's TOTAL token count (dl), derived
       // from the batch's own tf sums at ingest — BM25 length
       // normalization then never re-scans the postings (a doc's full
       // term rows span all 64 tbuckets, so a read-time dl would defeat
       // the pruned-read contract). Replay-safe like doc_id itself: a
       // re-delivered doc contributes the identical (doc_id, dl) row.
-      postingsOf(docs).groupBy(col("doc_id"))
-        .agg(sum(col("tf")).as("dl"))
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-  }
+      postingsOf(docs).groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))))
 
   /** Build (overwrite) the index as epoch 0. */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "search-build") {
-    val root = new Path(indexDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-    writeEpoch(spark, indexDir, 0, docs)
-  }
+    store.build(spark, docs, indexDir)
 
   /** Fold a batch of new documents in: tokenization is a pure per-doc
     * function, so the batch's postings land as a fresh epoch with no
@@ -95,15 +81,11 @@ object SearchIndex {
     * [[residentDocIds]]. */
   def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
     StoreLock.withLock(spark, indexDir, "search-append") {
-    // v1 stores migrate BEFORE the append so a mixed-schema ledger (old
-    // epochs without dl, new epochs with it) can never exist on disk
-    migrateDocsLedger(spark, indexDir)
-    val postings = new Path(indexDir, "postings.parquet")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = fs.listStatus(postings).map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toInt).max + 1
-    writeEpoch(spark, indexDir, next, batch)
-  }
+      // v1 stores migrate BEFORE the append so a mixed-schema ledger (old
+      // epochs without dl, new epochs with it) can never exist on disk
+      migrateDocsLedger(spark, indexDir)
+      store.append(spark, indexDir, batch)
+    }
 
   /** v1→v2 docs-ledger migration (the LmIndex v1→v2 prefix discipline):
     * v2 made the ledger carry (doc_id, dl), and BM25's length
@@ -165,7 +147,7 @@ object SearchIndex {
     * anti-join AND stays hidden by the tombstone, the IVF-family
     * shadowing semantics. */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct()
+    store.residentDocIds(spark, indexDir)
 
   // --- Deletion (tombstones) — the [[IvfIndex.deleteFromIndex]] pattern
   // applied to the text store: a takedown request must remove a
@@ -176,7 +158,7 @@ object SearchIndex {
 
   /** Tombstone a set of (doc_id) rows — O(ids), one atomic rename. */
   def deleteFromIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit =
-    Tombstones.delete(spark, indexDir, ids, "doc_id")
+    store.delete(spark, indexDir, ids)
 
   private def minusTombstones(
       spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
@@ -188,17 +170,27 @@ object SearchIndex {
     * epochs OR pending tombstones (a one-epoch store with tombstones
     * still needs the rewrite — only after it may the table retire), and
     * the postings rewrite preserves the tbucket directory layout so the
-    * pruned-read contract survives compaction. */
+    * pruned-read contract survives compaction.
+    *
+    * Search's own, not [[TombstoneStore.compact]]: `term_df` is derived
+    * from the FOLDED postings and cannot be folded per epoch (a per-epoch
+    * df sum would keep the deleted docs), so it is rewritten whenever the
+    * postings fold ran — even at one `term_df` epoch — and backfilled on
+    * stores written before the summary existed. */
   def compact(spark: SparkSession, indexDir: String): Unit =
     StoreLock.withLock(spark, indexDir, "search-compact") {
     // a v1 ledger must gain dl BEFORE the fold — distinct() over a
     // mixed-schema table would drop it for every doc
     migrateDocsLedger(spark, indexDir)
+    val postings = new Path(indexDir, "postings.parquet")
+    val termDfT = new Path(indexDir, "term_df.parquet")
+    // uncommitted residue must not fold into the committed epoch=0
+    EpochLedger.dropOrphans(spark, s"$indexDir/${EpochLedger.Ledger}",
+      Seq(postings.toString, termDfT.toString))
     // frozen tombstone epoch set: fold out exactly these, retire exactly
     // these — a takedown racing this compact stays pending for the next
     val ts = Tombstones.snapshot(spark, indexDir)
     val haveTombstones = ts.nonEmpty
-    val postings = new Path(indexDir, "postings.parquet")
     val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def epochsOf(p: Path): Int =
       if (!fs.exists(p)) 0
@@ -220,11 +212,8 @@ object SearchIndex {
     // reach here with ts EMPTY — pending tombstones force the fold), so
     // this is one groupBy(term) count with map-side partials, never a
     // second whole-store dedup shuffle or a re-applied anti-join
-    val termDfT = new Path(indexDir, "term_df.parquet")
     if (foldPostings || !fs.exists(termDfT) || epochsOf(termDfT) > 1) {
-      val folded = mergedPostings(spark, indexDir,
-        spark.read.parquet(postings.toString))
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val folded = foldedTermDf(spark, indexDir)
       if (fs.exists(termDfT))
         AtomicPublish.swapDir(spark, termDfT.toString) { tmp =>
           folded.write.parquet(s"$tmp/epoch=0")
@@ -250,6 +239,12 @@ object SearchIndex {
     ts.clear(spark)
     ()
   }
+
+  /** (term, df) over the merged postings — `term_df` as the compact
+    * rewrites it from the folded postings. */
+  private def foldedTermDf(spark: SparkSession, indexDir: String): DataFrame =
+    mergedPostings(spark, indexDir, spark.read.parquet(s"$indexDir/postings.parquet"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
 
   /** The family's read-merge: dedupe (doc_id, term) — duplicate rows from
     * a crash-window replay carry the identical tf, so MIN is invariance,
@@ -358,8 +353,10 @@ object SearchIndex {
     * count over the merged postings, which the append≡rebuild spec pins.
     * Crash rule: a term_df epoch is only summed if its DOCS epoch exists
     * (the ledger rename is the commit point) — an orphaned term_df epoch
-    * from a crash window would otherwise double its batch's df when the
-    * replay lands the same batch under the next number. Returns None
+    * from a crash window is uncommitted until the replay reconciles it
+    * away and lands the batch under the same number
+    * ([[EpochLedger.append]]), and stores written by older code, whose
+    * replay numbered past the orphan, keep it for good. Returns None
     * unless the summary COVERS every committed docs epoch: a pre-summary
     * store that took one append has a term_df holding only the new
     * epoch, and serving that partial sum would drop every old-epoch

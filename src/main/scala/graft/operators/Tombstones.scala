@@ -17,10 +17,13 @@ import org.apache.spark.sql.functions.col
   *    store rewrite;
   *  - every read path calls [[minus]], so deleted keys vanish from
   *    results immediately;
-  *  - the family's compact folds the tombstoned rows out of its tables
-  *    and then calls [[clear]] — publish-before-delete, so a crash in
-  *    between leaves tombstones shadowing already-removed rows, a
-  *    harmless no-op the next compact clears;
+  *  - compact folds the tombstoned rows out of the store's tables and
+  *    then calls [[Snapshot.clear]] — publish-before-delete, so a crash
+  *    in between leaves tombstones shadowing already-removed rows, a
+  *    harmless no-op the next compact clears. The doc-keyed families
+  *    (Eval, Pack, Winnow) run it as [[TombstoneStore.compact]], and
+  *    [[SearchIndex]], [[PqIndex]], [[AnnIndex]] and [[IvfIndex]] keep
+  *    their own (the reasons are in the [[TombstoneStore]] scaladoc);
   *  - [[pending]] tells the compact to run even at one epoch (the
   *    EpochCompact no-op must not retire unapplied tombstones);
   *  - within a tombstone's lifetime a re-appended key stays dead;

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,40 +30,36 @@ import org.apache.spark.sql.functions._
   *    and the deletion-applying compact refreshes the persisted reps
   *    from the survivors so the fast path resumes.
   *
-  * Layout under `indexDir` (family conventions: epoch-partitioned,
-  * dot-prefixed staging, one rename per table per publish):
-  *  - `fps.parquet/epoch=K`:     (tid, rep, nfp, gh) — the epoch's
-  *    distinct texts' selected fingerprints
+  * Layout under `indexDir` (a [[TombstoneStore]]: epoch-partitioned,
+  * dot-prefixed staging, one rename per table per publish, in this
+  * order):
   *  - `members.parquet/epoch=K`: (tid, doc_id) — doc-attributed text
   *    membership, the deletion and rep-recovery table
+  *  - `fps.parquet/epoch=K`:     (tid, rep, nfp, gh) — the epoch's
+  *    distinct texts' selected fingerprints
   *  - `docs.parquet/epoch=K`:    (doc_id) — replay-safe membership ledger
   */
 object WinnowIndex {
 
-  private def writeEpoch(
-      spark: SparkSession, indexDir: String, epoch: Int, docs: DataFrame): Unit = {
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for ((tab, df) <- Seq(
-        "fps.parquet" -> WinnowOps.fpRows(docs),
-        "members.parquet" -> docs
-          .select(xxhash64(col("text")).as("tid"), col("doc_id")).distinct(),
-        "docs.parquet" -> docs.select(col("doc_id")).distinct())) {
-      AtomicPublish.stageAndRename(
-        spark, new Path(root, tab).toString, s".epoch-$epoch.tmp", s"epoch=$epoch") {
-        tmp => df.write.mode("overwrite").parquet(tmp.toString)
-      }
-    }
-  }
+  private val store = new TombstoneStore("winnow", Seq(
+    TombstoneTable("members.parquet", Nil, Fold.Rows),
+    // the fps fold refreshes each surviving text's PERSISTED rep from the
+    // already-folded members (texts with no survivor drop out), so the
+    // fast read path resumes after a deletion-applying compact
+    TombstoneTable("fps.parquet", Nil, Fold.Derived((spark, indexDir) =>
+      raw => mergeStoredFps(raw).join(
+        spark.read.parquet(s"$indexDir/members.parquet")
+          .groupBy(col("tid")).agg(min(col("doc_id")).as("rep")), "tid")
+        .select(col("tid"), col("rep"), col("nfp"), col("gh")))),
+    TombstoneTable(EpochLedger.Ledger, Nil, Fold.Rows)),
+    docs => Seq(
+      docs.select(xxhash64(col("text")).as("tid"), col("doc_id")).distinct(),
+      WinnowOps.fpRows(docs),
+      docs.select(col("doc_id")).distinct()))
 
   /** Build (overwrite) the index as epoch 0. */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit =
-    StoreLock.withLock(spark, indexDir, "winnow-build") {
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    writeEpoch(spark, indexDir, 0, docs)
-  }
+    store.build(spark, docs, indexDir)
 
   /** Pre-v3 (members-less) store guard: v3 made `members.parquet` the
     * deletion and rep-recovery table, and both the compact's fps fold
@@ -76,15 +71,19 @@ object WinnowIndex {
     * so unlike the LmIndex v1→v2 prefix migration the only path is a
     * rebuild from the corpus — fail loudly and say so.
     *
-    * Replay-aware: the MAX fps epoch may lack its members twin when its
-    * DOCS twin is also missing (a crash between the fps and members
-    * renames — docs.parquet is the commit point, so the family's
-    * at-least-once replay re-appends the batch), and an older orphan
-    * whose tids are all covered by members rows is that same residue
-    * already repaired by the replay. A tail epoch WITH a committed docs
-    * twin but no members is not a crash window — it is a legacy store
-    * (the single-epoch pre-v3 case), and only uncovered tids distinguish
-    * it from repaired residue.
+    * Replay-aware: members now publish before fps, so an fps epoch
+    * always has its members twin, and any residue of a crash before the
+    * docs ledger (the commit point) is reconciled away by the replay
+    * ([[EpochLedger.reconciledNext]]). Stores written by older code
+    * published fps first: their MAX fps epoch may lack its members twin
+    * when its DOCS twin is also missing (that crash window, tolerated
+    * until the replay), and a NON-tail orphan whose tids are all covered
+    * by members rows is that residue after an older replay, which
+    * numbered past it. Covered tids also excuse fps epochs whose members
+    * a compact folded before crashing ahead of the fps fold. A tail
+    * epoch WITH a committed docs twin but no members is not a crash
+    * window — it is a legacy store (the single-epoch pre-v3 case), and
+    * only uncovered tids distinguish it from repaired residue.
     *
     * ONE rule body for the mutation guard ([[requireMembersTwin]], which
     * throws on `legacy`) and the fleet health check
@@ -140,19 +139,15 @@ object WinnowIndex {
     * batches against [[residentDocIds]]. */
   def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
     StoreLock.withLock(spark, indexDir, "winnow-append") {
-    requireMembersTwin(spark, indexDir, "append")
-    val fps = new Path(indexDir, "fps.parquet")
-    val fs = fps.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = fs.listStatus(fps).map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toInt).max + 1
-    writeEpoch(spark, indexDir, next, batch)
-  }
+      requireMembersTwin(spark, indexDir, "append")
+      store.append(spark, indexDir, batch)
+    }
 
   /** Doc_ids already folded in (the streaming anti-join target) —
     * tombstoned docs stay here until compaction, the family's shadowing
     * semantics (a deleted doc re-arriving stays dead). */
   def residentDocIds(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/docs.parquet").select(col("doc_id")).distinct()
+    store.residentDocIds(spark, indexDir)
 
   /** Takedown: tombstone the docs — O(ids). Every read re-derives each
     * text's representative from the SURVIVING members, so a text whose
@@ -164,7 +159,7 @@ object WinnowIndex {
     // deletion flips reads onto the members join — a members-less store
     // would silently drop legacy texts from the match report
     requireMembersTwin(spark, indexDir, "delete")
-    Tombstones.delete(spark, indexDir, ids, "doc_id")
+    store.delete(spark, indexDir, ids)
   }
 
   /** Text identities already fingerprinted — the match stream's SECOND
@@ -176,30 +171,16 @@ object WinnowIndex {
   def residentTids(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/fps.parquet").select(col("tid")).distinct()
 
-  /** Fold all epochs into one — exactly the merge every read performs
-    * ([[EpochCompact]] swap safety); tombstoned members fold out, texts
-    * with no surviving member drop their fingerprint rows, and the
-    * SNAPSHOT's tombstone epochs retire (a takedown racing the compact
-    * stays pending). */
+  /** Fold all epochs into one ([[TombstoneStore.compact]]) — exactly the
+    * merge every read performs; tombstoned members fold out, texts with
+    * no surviving member drop their fingerprint rows, and the SNAPSHOT's
+    * tombstone epochs retire (a takedown racing the compact stays
+    * pending). */
   def compact(spark: SparkSession, indexDir: String): Unit =
     StoreLock.withLock(spark, indexDir, "winnow-compact") {
-    requireMembersTwin(spark, indexDir, "compact")
-    val ts = Tombstones.snapshot(spark, indexDir)
-    EpochCompact.compactTable(spark, s"$indexDir/members.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    // the fps fold refreshes each surviving text's PERSISTED rep from the
-    // already-folded members (texts with no survivor drop out), so the
-    // fast read path resumes after a deletion-applying compact
-    EpochCompact.compactTable(spark, s"$indexDir/fps.parquet",
-      raw => mergeStoredFps(raw).join(
-        spark.read.parquet(s"$indexDir/members.parquet")
-          .groupBy(col("tid")).agg(min(col("doc_id")).as("rep")), "tid")
-        .select(col("tid"), col("rep"), col("nfp"), col("gh")),
-      ts.nonEmpty)
-    EpochCompact.compactTable(spark, s"$indexDir/docs.parquet",
-      raw => ts.minus(spark, raw.distinct(), "doc_id"), ts.nonEmpty)
-    ts.clear(spark)
-  }
+      requireMembersTwin(spark, indexDir, "compact")
+      store.compact(spark, indexDir)
+    }
 
   /** The family's read-merge over the stored rows WITHOUT the rep:
     * dedupe (tid, gh); nfp is a function of the text so min is a no-op

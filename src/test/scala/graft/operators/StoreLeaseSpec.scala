@@ -265,6 +265,24 @@ class StoreLeaseSpec extends AnyFunSuite {
     }
   }
 
+  test("a PqIndex append under a usurped hold is fenced: it throws and " +
+      "publishes no new codes.parquet epoch") {
+    val idx = tmp("graft-leasepq") + "/pq"
+    val rnd = new scala.util.Random(7)
+    val emb = (0L until 96L)
+      .map(i => (i, i % 3, Seq.fill(64)(rnd.nextFloat())))
+      .toDF("vec_id", "label", "embedding")
+    PqIndex.buildIndex(spark, emb.filter(col("vec_id") % 3 =!= 0), idx)
+    StoreLock.withLock(spark, idx, "spec-usurped-pq") {
+      Files.writeString(leaseFile(idx), "31337@usurper#beef\nspec\n")
+      intercept[StoreLock.LeaseLostException] {
+        PqIndex.appendToIndex(spark, idx, emb.filter(col("vec_id") % 3 === 0))
+      }
+    }
+    assert(!Files.exists(Paths.get(s"$idx/codes.parquet/epoch=1")))
+    Files.delete(leaseFile(idx)) // the usurper's lease survives our exit
+  }
+
   test("an EMPTY lease read refuses the publish but is NOT sticky: the " +
       "hold recovers once the lease reads as ours again (review r14 — " +
       "a transient mid-create window must not permanently fence a " +

@@ -2,20 +2,30 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The snapshot discipline, pinned across EVERY tombstone family: a
+/** The snapshot discipline, pinned across EVERY tombstone compact: a
   * compact must read/fold/clear through a [[Tombstones.Snapshot]]
   * (frozen epoch set), never the live table — a live re-scan lets a
   * takedown epoch written between the fold-read and the clear be
   * destroyed unapplied, resurrecting the key ([[Tombstones.Snapshot]]
   * docs; unit semantics pinned by `TombstonesSpec`). The unit spec
-  * proves the Snapshot type is safe; THIS spec proves every family's
-  * compact actually goes through it — the round-11 advisory pattern
-  * was exactly one family quietly diverging from a shared discipline. */
+  * proves the Snapshot type is safe; THIS spec proves every compact
+  * actually goes through it — [[TombstoneStore]]'s for the families
+  * that delegate to it, and each own compact (Ivf, Pq, Ann, Search) —
+  * since the round-11 advisory pattern was exactly one family quietly
+  * diverging from a shared discipline. */
 class TombstoneDisciplineSpec extends AnyFunSuite {
 
-  private val families = Seq(
-    "IvfIndex", "PqIndex", "AnnIndex", "SearchIndex",
-    "WinnowIndex", "PackIndex", "EvalIndex")
+  /** Files whose own compact folds tombstones. */
+  private val compacts = Seq(
+    "IvfIndex", "PqIndex", "AnnIndex", "SearchIndex", "TombstoneStore")
+  /** Families whose compact and delete are [[TombstoneStore]]'s. */
+  private val delegating = Seq("WinnowIndex", "PackIndex", "EvalIndex")
+
+  private def source(file: String): String =
+    new String(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"src/main/scala/graft/operators/$file.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
 
   private def compactBody(src: String, file: String): String = {
     val start = src.indexOf("def compact(")
@@ -30,12 +40,8 @@ class TombstoneDisciplineSpec extends AnyFunSuite {
 
   test("every tombstone family's compact folds and clears through a " +
       "frozen Tombstones.snapshot, never the live table") {
-    for (f <- families) {
-      val path = s"src/main/scala/graft/operators/$f.scala"
-      val src = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val body = compactBody(src, f)
+    for (f <- compacts) {
+      val body = compactBody(source(f), f)
       assert(body.contains("Tombstones.snapshot(spark"),
         s"$f.compact must freeze the tombstone epoch set")
       assert(body.contains("ts.clear(spark)") || body.contains(".clear(spark)"),
@@ -45,17 +51,27 @@ class TombstoneDisciplineSpec extends AnyFunSuite {
       assert(!body.contains("Tombstones.ids("),
         s"$f.compact must not re-scan the live tombstone set")
     }
+    for (f <- delegating) {
+      val src = source(f)
+      val body = compactBody(src, f)
+      assert(src.contains("new TombstoneStore("), s"$f must be a TombstoneStore")
+      assert(body.contains("store.compact(spark"),
+        s"$f.compact must delegate to TombstoneStore.compact")
+      assert(!body.contains("Tombstones.minus(") && !body.contains("Tombstones.ids("),
+        s"$f.compact must not touch the live tombstone set")
+    }
   }
 
   test("every tombstone family's deleteFrom* routes through the locked " +
       "Tombstones.delete (epoch numbering is read-modify-write)") {
-    for (f <- families) {
-      val path = s"src/main/scala/graft/operators/$f.scala"
-      val src = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(src.contains("Tombstones.delete(spark"),
+    for (f <- Seq("IvfIndex", "PqIndex", "AnnIndex", "TombstoneStore"))
+      assert(source(f).contains("Tombstones.delete(spark"),
         s"$f must delete through the shared locked path")
+    for (f <- delegating :+ "SearchIndex") {
+      val src = source(f)
+      assert(src.contains("new TombstoneStore("), s"$f must be a TombstoneStore")
+      assert(src.contains("store.delete(spark"),
+        s"$f must delete through TombstoneStore.delete")
     }
   }
 }
