@@ -8,13 +8,17 @@ import org.apache.spark.sql.SparkSession
   * sequences drift independently; one helper can't). All three share the
   * invariants every family was built on: dot-prefixed staging dirs are
   * invisible to readers (partition discovery skips them), a reader sees
-  * whole published dirs or nothing, and the writer is single-threaded per
-  * store (epoch numbering is read-modify-write).
+  * whole published dirs or nothing, and one writer at a time per store
+  * (epoch numbering is read-modify-write) — that writer may stage tables
+  * from several threads, but renames from one.
   *
   *  - [[stageAndRename]]: write invisible, delete the old live name, one
   *    rename to publish. The per-epoch append path: the live name never
   *    exists half-written; a crash before the rename leaves only staging
-  *    residue that the next attempt deletes.
+  *    residue that the next attempt deletes. Its halves ([[stage]],
+  *    [[rename]]) are public so a multi-table epoch can stage every
+  *    table CONCURRENTLY and then rename them in a fixed order
+  *    ([[EpochLedger.writeEpoch]]).
   *  - [[publishThenDelete]]: write the consolidated copy invisible,
   *    publish it as a FRESH name, only then delete the inputs. The
   *    compaction path for stores whose reads tolerate old + consolidated
@@ -43,20 +47,39 @@ object AtomicPublish {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Write via `write` into `parentDir/tmpName` (must be dot-prefixed —
-    * enforced), then replace `parentDir/liveName` with it. FENCED: when
-    * the calling writer holds a store lease over `liveName`, ownership is
-    * re-verified immediately before the destructive live-name delete
-    * ([[StoreLock.fence]]) — a hold lost to a takeover refuses here with
-    * the live store intact instead of clobbering the new owner's work. */
+    * enforced), then replace `parentDir/liveName` with it ([[stage]],
+    * then [[rename]]). */
   def stageAndRename(
       spark: SparkSession, parentDir: String, tmpName: String, liveName: String)(
       write: Path => Unit): Unit = {
+    stage(spark, parentDir, tmpName)(write)
+    rename(spark, parentDir, tmpName, liveName)
+  }
+
+  /** The invisible half of [[stageAndRename]]: clear `parentDir/tmpName`
+    * (must be dot-prefixed — enforced) and write it via `write`. Touches
+    * no live name, so a writer may stage several tables at once and
+    * rename them afterwards ([[EpochLedger.writeEpoch]]). */
+  def stage(spark: SparkSession, parentDir: String, tmpName: String)(
+      write: Path => Unit): Unit = {
     require(tmpName.startsWith("."), s"staging name must be dot-prefixed: $tmpName")
+    val tmp = new Path(parentDir, tmpName)
+    fsOf(spark, tmp).delete(tmp, true)
+    write(tmp)
+  }
+
+  /** The publishing half of [[stageAndRename]]: replace
+    * `parentDir/liveName` with the staged `parentDir/tmpName`. FENCED:
+    * when the calling writer holds a store lease over `liveName`,
+    * ownership is re-verified immediately before the destructive
+    * live-name delete ([[StoreLock.fence]]) — a hold lost to a takeover
+    * refuses here with the live store intact instead of clobbering the
+    * new owner's work. */
+  def rename(
+      spark: SparkSession, parentDir: String, tmpName: String, liveName: String): Unit = {
     val tmp = new Path(parentDir, tmpName)
     val live = new Path(parentDir, liveName)
     val fs = fsOf(spark, tmp)
-    fs.delete(tmp, true)
-    write(tmp)
     StoreLock.fence(spark.sparkContext.hadoopConfiguration, live)
     fs.delete(live, true)
     if (!fs.rename(tmp, live))

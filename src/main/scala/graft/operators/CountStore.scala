@@ -77,7 +77,7 @@ private[operators] final class CountStore(
     * pending deletions excluded. */
   def residentDocIds(spark: SparkSession, dir: String): DataFrame =
     NegEpochs.minus(spark, dir,
-      spark.read.parquet(ledger(dir)).select(col("doc_id")).distinct())
+      StoreRead.table(spark, ledger(dir)).select(col("doc_id")).distinct())
 
   /** Takedown: subtract the victims' own counts as a negative epoch —
     * O(victims); a replayed takedown is a no-op. */
@@ -128,6 +128,5 @@ private[operators] final class CountStore(
     * committed deletions. */
   def totals(spark: SparkSession, dir: String, t: CountTable): DataFrame =
     NegEpochs.netTotals(spark, dir, t.name, t.keys, t.counters,
-      spark.read.parquet(s"$dir/${t.name}")
-        .filter(col("epoch") <= EpochLedger.committedMax(spark, ledger(dir))))
+      StoreRead.committed(spark, dir, t.name))
 }

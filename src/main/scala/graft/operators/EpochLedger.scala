@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.TaskPool
 
 /** A table's place in an epoch write: its directory under the store and
   * the columns its epoch dirs are partitioned by (on-disk layout —
@@ -14,8 +15,9 @@ private[operators] final case class EpochTable(name: String, partitionBy: Seq[St
   * [[TombstoneStore]], which share ONE write path here ([[build]],
   * [[append]], [[writeEpoch]]); [[TokenizerIndex]] stats+docs and the
   * [[NegEpochs]] deletion ledger follow the same rules by hand. Each
-  * append publishes one rename per table and then the ledger's, and the
-  * window between them used to break replay idempotence — the tables
+  * append stages all of its tables concurrently, then publishes one
+  * rename per table and the ledger's last, and the window between the
+  * renames used to break replay idempotence — the tables
   * committed but the ledger didn't, so the documented replay anti-join
   * re-appended the same batch and DOUBLE-COUNTED the additive counters
   * (and shifted Pack's offsets twice: its append reads the resident
@@ -24,16 +26,17 @@ private[operators] final case class EpochTable(name: String, partitionBy: Seq[St
   * The discipline, shared so the stores can't drift apart:
   *
   *  - the LEDGER rename is the commit point: table epochs first,
-  *    ledger epoch last;
+  *    ledger epoch last — staging is concurrent, the renames are
+  *    ordered and start only once every table is staged;
   *  - the next epoch number derives from the LEDGER, not a table
   *    ([[reconciledNext]]);
   *  - a table epoch ≥ the ledger-derived next is the residue of a
   *    crash between the renames — [[reconciledNext]] deletes it
   *    before the rewrite, so the replayed batch lands exactly once;
-  *  - reads of the counter tables skip uncommitted epochs by filtering
-  *    the epoch partition column to ≤ the ledger max
-  *    ([[committedMax]]) — the residue never reaches served arithmetic
-  *    even before the repairing replay arrives;
+  *  - reads of the tables skip uncommitted epochs by filtering the
+  *    epoch partition column to ≤ the ledger max ([[committedMax]],
+  *    [[StoreRead.committed]]) — the residue is never served, even
+  *    before the repairing replay arrives;
   *  - compaction drops orphans ([[dropOrphans]]) and must fold every
   *    table before the ledger (all fold to `epoch=0` via
   *    [[EpochCompact]]'s swap): a crash between the folds then leaves
@@ -84,22 +87,31 @@ private[operators] object EpochLedger {
   /** The commit-point table of every ledger-committed store. */
   val Ledger = "docs.parquet"
 
-  /** Publish one epoch: each table's frame is staged and renamed in
-    * `tables` order, the [[Ledger]] LAST (its rename commits the epoch).
-    * Every frame is unpersisted once the epoch is published, so a frames
-    * function may persist what its frames share. */
+  /** Publish one epoch in two phases. STAGE: every table's frame is
+    * written into its dot-prefixed `.epoch-K.tmp` dir at the same time
+    * ([[graft.TaskPool]], one thread per table), and the call waits for
+    * every write — also after one failed — so a failed epoch leaves no
+    * write running and renames nothing. RENAME: each staged dir then
+    * replaces `epoch=K` in `tables` order, the [[Ledger]] LAST (its
+    * rename commits the epoch). Every frame is unpersisted once the
+    * epoch is published, so a frames function may persist what its
+    * frames share. */
   def writeEpoch(
       spark: SparkSession, dir: String, epoch: Int,
       tables: Seq[EpochTable], frames: Seq[DataFrame]): Unit = {
     require(tables.lastOption.exists(_.name == Ledger), s"$Ledger must publish last")
-    try
-      for ((t, df) <- tables.zip(frames))
-        AtomicPublish.stageAndRename(
-          spark, s"$dir/${t.name}", s".epoch-$epoch.tmp", s"epoch=$epoch") {
-          tmp => df.write.mode("overwrite").partitionBy(t.partitionBy: _*)
-            .parquet(tmp.toString)
-        }
-    finally frames.foreach(_.unpersist())
+    val staging = s".epoch-$epoch.tmp"
+    try {
+      TaskPool.inParallel(spark.sparkContext, tables.size)(
+        tables.zip(frames).map { case (t, df) => () =>
+          AtomicPublish.stage(spark, s"$dir/${t.name}", staging) { tmp =>
+            df.write.mode("overwrite").partitionBy(t.partitionBy: _*)
+              .parquet(tmp.toString)
+          }
+        })
+      for (t <- tables)
+        AtomicPublish.rename(spark, s"$dir/${t.name}", staging, s"epoch=$epoch")
+    } finally frames.foreach(_.unpersist())
   }
 
   /** Build (overwrite) the store as epoch 0 under the store lock. */

@@ -61,13 +61,16 @@ object EvalIndex {
   def deleteFromIndex(spark: SparkSession, indexDir: String, ids: DataFrame): Unit =
     store.delete(spark, indexDir, ids)
 
-  /** Doc-attributed served rows (doc_id, shingle) — tombstone-excluded,
+  /** Doc-attributed served rows (doc_id, shingle) — committed epochs
+    * only ([[StoreRead.committed]]), tombstone-excluded,
     * distinct read-merge, so duplicate epochs and the compaction publish
     * window change nothing. Serves the contamination lane's per-doc
     * totals (round 17) without re-shingling the eval texts per run;
     * [[shingles]] is its projection. */
   def docShingles(spark: SparkSession, indexDir: String): DataFrame = {
     val live = s"$indexDir/shingles.parquet"
+    val rows = StoreRead.committed(spark, indexDir, "shingles.parquet")
+      .select(col("doc_id"), col("shingle"))
     // single-epoch fast path (round 17, §2.4): each epoch's rows are
     // (doc_id, shingle)-unique by the write invariant (the frame is
     // written distinct; compact folds to one epoch), so with no
@@ -76,12 +79,9 @@ object EvalIndex {
     // store to change nothing
     if (!Tombstones.pending(spark, indexDir) &&
       IndexPolicy.epochCount(spark, live) <= 1)
-      spark.read.parquet(live).select(col("doc_id"), col("shingle"))
+      rows
     else
-      Tombstones.minus(spark, indexDir,
-        spark.read.parquet(live)
-          .select(col("doc_id"), col("shingle")), "doc_id")
-        .distinct()
+      Tombstones.minus(spark, indexDir, rows, "doc_id").distinct()
   }
 
   /** The served leak vocabulary. */

@@ -197,7 +197,7 @@ object IndexFsck {
         val docs = new Path(root, "docs.parquet")
         if (fs.exists(docs)) {
           val legacyEpochs = children(spark, docs).filter(_.startsWith("epoch="))
-            .filterNot(e => spark.read.parquet(s"$docs/$e").columns.contains("dl"))
+            .filterNot(e => StoreRead.table(spark, s"$docs/$e").columns.contains("dl"))
           if (legacyEpochs.nonEmpty)
             out += Finding(dir, family, "docs_ledger_v1", "error",
               s"epochs without dl (BM25 reads refuse): ${legacyEpochs.mkString(", ")} — any append/compact migrates")
@@ -217,30 +217,35 @@ object IndexFsck {
             out += Finding(dir, family, "members_twin", "error",
               s"pre-v3 members-less epochs ${eps.mkString(",")} — mutations refused, rebuild from the corpus")
         }
-      case "lm-bigram" | "classifier" | "dsir" | "sketch" | "span" =>
-        // counter epochs past the ledger commit point: crash residue —
-        // harmless to reads (ledger-protocol families skip uncommitted
-        // epochs; sketch value-merges the duplicate away) and retired by
-        // the reconciling append (ledger families) or the next compact
-        val max = EpochLedger.committedMax(spark, s"$dir/docs.parquet")
-        val (negTables, posTables) = storeKids
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("docs") &&
-            !n.startsWith("dels") && !n.startsWith("documents"))
-          .partition(_.startsWith("neg-"))
-        // positive counters commit via the docs ledger; NEGATIVE epochs
-        // commit via the dels ledger (NegEpochs protocol)
-        val delsMax = EpochLedger.committedMax(spark, s"$dir/dels.parquet")
-        val orphans =
-          posTables.flatMap { t =>
-            EpochLedger.epochs(spark, s"$dir/$t").filter(_ > max).map(e => s"$t/epoch=$e")
-          } ++ negTables.flatMap { t =>
-            EpochLedger.epochs(spark, s"$dir/$t").filter(_ > delsMax).map(e => s"$t/epoch=$e")
-          }
-        if (orphans.nonEmpty)
-          out += Finding(dir, family, "counter_orphans", "warn",
-            "uncommitted counter epochs (reads skip or value-merge them; " +
-              s"a reconciling append or the next compact retires them): ${orphans.mkString(", ")}")
       case _ => ()
+    }
+    // table epochs past the ledger commit point: crash residue — harmless
+    // to reads (ledger-protocol families skip uncommitted epochs; sketch
+    // value-merges the duplicate away) and retired by the reconciling
+    // append or the next compact
+    val counterFamily = Set("lm-bigram", "classifier", "dsir", "sketch", "span")
+    val tombstoneFamily = Set("search", "winnow", "pack", "eval-vocab")
+    if (counterFamily(family) || tombstoneFamily(family)) {
+      val max = EpochLedger.committedMax(spark, s"$dir/docs.parquet")
+      val (negTables, posTables) = storeKids
+        .filter(n => n.endsWith(".parquet") && !n.startsWith("docs") &&
+          !n.startsWith("dels") && !n.startsWith("documents") &&
+          !n.startsWith("tombstones"))
+        .partition(_.startsWith("neg-"))
+      // positive tables commit via the docs ledger; NEGATIVE epochs
+      // commit via the dels ledger (NegEpochs protocol)
+      val delsMax = EpochLedger.committedMax(spark, s"$dir/dels.parquet")
+      val orphans =
+        posTables.flatMap { t =>
+          EpochLedger.epochs(spark, s"$dir/$t").filter(_ > max).map(e => s"$t/epoch=$e")
+        } ++ negTables.flatMap { t =>
+          EpochLedger.epochs(spark, s"$dir/$t").filter(_ > delsMax).map(e => s"$t/epoch=$e")
+        }
+      if (orphans.nonEmpty)
+        out += Finding(dir, family,
+          if (counterFamily(family)) "counter_orphans" else "table_orphans", "warn",
+          "uncommitted table epochs (reads skip or value-merge them; " +
+            s"a reconciling append or the next compact retires them): ${orphans.mkString(", ")}")
     }
     val findings = out.result()
     if (findings.isEmpty) Seq(Finding(dir, family, "all", "ok", "no findings"))

@@ -52,7 +52,7 @@ private[operators] object NegEpochs {
   def deletedIds(spark: SparkSession, modelDir: String): Option[DataFrame] = {
     val d = delsDir(modelDir)
     if (EpochLedger.epochs(spark, d).nonEmpty)
-      Some(spark.read.parquet(d).select(col("doc_id")).distinct())
+      Some(StoreRead.table(spark, d).select(col("doc_id")).distinct())
     else None
   }
 
@@ -91,7 +91,7 @@ private[operators] object NegEpochs {
     val all =
       if (EpochLedger.epochs(spark, nd).isEmpty) posKC
       else posKC.unionByName(
-        spark.read.parquet(nd)
+        StoreRead.table(spark, nd)
           .filter(col("epoch") <= committed)
           .select((keys.map(col) ++ cnts.map(c => (-col(c)).as(c))): _*))
     val aggs = cnts.map(c => sum(col(c)).as(c))

@@ -61,7 +61,7 @@ object PackIndex {
     * once. Caller dedupes batches against [[residentDocIds]]. */
   def appendToIndex(spark: SparkSession, indexDir: String, batch: DataFrame): Unit =
     store.append(spark, indexDir, {
-      val base = spark.read.parquet(s"$indexDir/base.parquet")
+      val base = StoreRead.table(spark, s"$indexDir/base.parquet")
         .groupBy(col("source")).agg(sum(col("btot")).as("base"))
       PackingOps.offsets(batch)
         .join(broadcast(base), Seq("source"), "left")
@@ -95,10 +95,11 @@ object PackIndex {
     store.compact(spark, indexDir)
 
   /** The served per-document manifest: the q_pack_chunks shape (window
-    * spans derived from the stored absolute offsets), tombstone-excluded. */
+    * spans derived from the stored absolute offsets), committed epochs
+    * only, tombstone-excluded. */
   def chunksFromIndex(spark: SparkSession, indexDir: String): DataFrame =
     Tombstones.minus(spark, indexDir,
-      spark.read.parquet(s"$indexDir/manifest.parquet"), "doc_id")
+      StoreRead.committed(spark, indexDir, "manifest.parquet"), "doc_id")
       .select(col("doc_id"), col("source"), col("n_toks"), col("start_tok"),
         expr(s"start_tok div ${WinTokens}L").as("first_win"),
         expr(s"(end_tok - 1) div ${WinTokens}L").as("last_win"))

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted inverted index (postings store) — the production twin of
   * the inline `q_keyword_search`/`q_hybrid_search` lanes, which re-build
@@ -28,7 +30,11 @@ import org.apache.spark.sql.types.LongType
   * by Spark's partition discovery, the [[IvfIndex]] probed-cells
   * contract applied to text. A 64-bucket layout keeps per-epoch file
   * counts bounded while making the worst-case keyword read 1/64 of the
-  * store (typical: k buckets).
+  * store (typical: k buckets). Every postings write (append epochs and
+  * the compact's fold) is hash-partitioned on `tbucket` over
+  * `defaultParallelism` tasks ([[spread]]): each bucket is still one
+  * file per epoch, and the 64 files are written by all cores instead of
+  * by one coalesced task.
   *
   * Layout under `indexDir` (a [[TombstoneStore]]: epoch-partitioned,
   * dot-prefixed staging, one rename per table per publish, in this
@@ -51,6 +57,19 @@ object SearchIndex {
       .agg(count(lit(1)).as("tf"))
       .withColumn("tbucket", pmod(xxhash64(col("term")), lit(TBuckets)))
 
+  /** A term's bucket computed on the driver — Spark's `xxhash64` (seed
+    * 42) `pmod` [[TBuckets]], the value [[postingsOf]] writes, without a
+    * query to compute it. */
+  private[operators] def tbucketOf(term: String): Long =
+    java.lang.Math.floorMod(
+      XxHash64Function.hash(UTF8String.fromString(term), StringType, 42L), TBuckets)
+
+  /** Postings hash-partitioned on `tbucket` over `defaultParallelism`
+    * tasks: one task per bucket set, so each bucket stays one file. */
+  private def spread(postings: DataFrame): DataFrame =
+    postings.repartition(
+      postings.sparkSession.sparkContext.defaultParallelism, col("tbucket"))
+
   // the folds describe the tables; [[compact]] runs them itself, keeping
   // the tbucket layout and the term_df backfill
   private val store = new TombstoneStore("search", Seq(
@@ -58,7 +77,7 @@ object SearchIndex {
     TombstoneTable("term_df.parquet", Nil,
       Fold.Derived((spark, indexDir) => _ => foldedTermDf(spark, indexDir))),
     TombstoneTable(EpochLedger.Ledger, Nil, Fold.Rows)),
-    docs => Seq(postingsOf(docs),
+    docs => Seq(spread(postingsOf(docs)),
       // the batch's per-term doc counts — the persisted half of the
       // hybrid lane's df cap, so serving never re-aggregates the whole
       // postings store ([[termDfFromStore]] for merge + crash rules)
@@ -112,7 +131,7 @@ object SearchIndex {
     if (!fs.exists(docsT)) return
     val legacy = fs.listStatus(docsT).map(_.getPath.getName)
       .filter(_.startsWith("epoch="))
-      .filter(e => !spark.read.parquet(s"$docsT/$e").columns.contains("dl"))
+      .filter(e => !StoreRead.table(spark, s"$docsT/$e").columns.contains("dl"))
     for (e <- legacy) {
       val k = e.stripPrefix("epoch=")
       val ids = spark.read.parquet(s"$docsT/$e").select(col("doc_id")).distinct()
@@ -200,7 +219,7 @@ object SearchIndex {
       val merged = ts.minus(spark,
         mergePostings(spark.read.parquet(postings.toString).drop("epoch")), "doc_id")
       AtomicPublish.swapDir(spark, postings.toString) { tmp =>
-        merged.write.partitionBy("tbucket").parquet(s"$tmp/epoch=0")
+        spread(merged).write.partitionBy("tbucket").parquet(s"$tmp/epoch=0")
       }
     }
     // the df summary rewrites from the (now-folded) postings —
@@ -268,17 +287,15 @@ object SearchIndex {
       raw.select(col("doc_id"), col("term"), col("tf"), col("tbucket"))
     else mergePostings(raw)
 
-  /** Merged postings for a bounded term set — the PRUNED read: the term
-    * filter restricts partition discovery to the query terms' buckets
-    * before any row is materialized. */
+  /** Merged COMMITTED postings for a bounded term set — the PRUNED
+    * read: the term filter restricts partition discovery to the query
+    * terms' buckets before any row is materialized. Plans without a
+    * Spark job (driver-side buckets, [[StoreRead]]). */
   private def termPostings(
       spark: SparkSession, indexDir: String, terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val buckets = terms.toDS()
-      .select(pmod(xxhash64(col("value")), lit(TBuckets)))
-      .collect().map(_.getLong(0)).distinct.toSeq
+    val buckets = terms.map(tbucketOf).distinct
     minusTombstones(spark, indexDir, mergedPostings(spark, indexDir,
-      spark.read.parquet(s"$indexDir/postings.parquet")
+      StoreRead.committed(spark, indexDir, "postings.parquet")
         .filter(col("tbucket").isin(buckets: _*))
         .filter(col("term").isin(terms: _*))))
   }
@@ -321,7 +338,7 @@ object SearchIndex {
     * (dl-less) ledger loudly: depending on which footer Spark picks, a
     * mixed read would otherwise throw cryptically or serve null dl. */
   private def docLengths(spark: SparkSession, indexDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$indexDir/docs.parquet")
+    val docs = StoreRead.table(spark, s"$indexDir/docs.parquet")
     if (!docs.columns.contains("dl"))
       throw new IllegalStateException(
         s"docs ledger at $indexDir/docs.parquet has no dl column (a v1 " +
@@ -390,7 +407,7 @@ object SearchIndex {
       spark: SparkSession, indexDir: String,
       queryMax: Long, candK: Int): DataFrame = {
     val merged = minusTombstones(spark, indexDir, mergedPostings(spark, indexDir,
-      spark.read.parquet(s"$indexDir/postings.parquet")))
+      StoreRead.committed(spark, indexDir, "postings.parquet")))
     // BM25-style df cap before pair generation (the shared
     // [[RetrievalOps.dfCapFilter]] predicate — posting rows ARE the
     // distinct (doc, term) table, and n_docs is the tombstone-excluded

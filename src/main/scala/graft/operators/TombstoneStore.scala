@@ -82,7 +82,7 @@ private[operators] final class TombstoneStore(
   /** Doc_ids already folded in (the streaming anti-join target) —
     * tombstoned docs stay until the compact. */
   def residentDocIds(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ledger(dir)).select(col("doc_id")).distinct()
+    StoreRead.table(spark, ledger(dir)).select(col("doc_id")).distinct()
 
   /** Takedown: tombstone the docs — O(ids). */
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit =

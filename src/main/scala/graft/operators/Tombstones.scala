@@ -67,7 +67,7 @@ object Tombstones {
     val ts = dirOf(indexDir)
     val fs = fsOf(spark, ts)
     if (fs.exists(ts) && fs.listStatus(ts).exists(_.getPath.getName.startsWith("epoch=")))
-      Some(spark.read.parquet(ts.toString).select(col(keyCol)).distinct())
+      Some(StoreRead.table(spark, ts.toString).select(col(keyCol)).distinct())
     else None
   }
 

@@ -167,9 +167,11 @@ object WinnowIndex {
     * passes the doc_id ledger, but every pair it participates in was
     * already reported when the text first arrived (and would re-report
     * under a DIFFERENT rep if the new doc_id min-merged below the
-    * resident one), so the stream drops it at text granularity. */
+    * resident one), so the stream drops it at text granularity.
+    * Committed epochs only: a text of a batch whose ledger rename was
+    * lost is not known yet, and its replay must not be dropped. */
   def residentTids(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/fps.parquet").select(col("tid")).distinct()
+    StoreRead.committed(spark, indexDir, "fps.parquet").select(col("tid")).distinct()
 
   /** Fold all epochs into one ([[TombstoneStore.compact]]) — exactly the
     * merge every read performs; tombstoned members fold out, texts with
@@ -195,7 +197,7 @@ object WinnowIndex {
     * (tombstone-excluded) — the deletion-aware slow path. */
   private def survivingReps(spark: SparkSession, indexDir: String): DataFrame =
     Tombstones.minus(spark, indexDir,
-      spark.read.parquet(s"$indexDir/members.parquet")
+      StoreRead.committed(spark, indexDir, "members.parquet")
         .select(col("tid"), col("doc_id")), "doc_id")
       .groupBy(col("tid")).agg(min(col("doc_id")).as("rep"))
 
@@ -209,22 +211,22 @@ object WinnowIndex {
     * 17: the serve's largest Exchange for every single-epoch store).
     * SLOW path (tombstones pending): reps re-derived from the surviving
     * members, texts with no survivor drop out — bit-identical to a
-    * rebuild without the deleted docs. */
-  def fpRowsFromIndex(spark: SparkSession, indexDir: String): DataFrame =
+    * rebuild without the deleted docs. Both read COMMITTED epochs only
+    * ([[StoreRead.committed]]). */
+  def fpRowsFromIndex(spark: SparkSession, indexDir: String): DataFrame = {
+    val fps = StoreRead.committed(spark, indexDir, "fps.parquet")
     if (!Tombstones.pending(spark, indexDir)) {
-      val live = s"$indexDir/fps.parquet"
-      if (IndexPolicy.epochCount(spark, live) <= 1)
-        spark.read.parquet(live)
-          .select(col("tid"), col("rep"), col("nfp"), col("gh"))
+      if (IndexPolicy.epochCount(spark, s"$indexDir/fps.parquet") <= 1)
+        fps.select(col("tid"), col("rep"), col("nfp"), col("gh"))
       else
-        spark.read.parquet(live)
-          .groupBy(col("tid"), col("gh"))
+        fps.groupBy(col("tid"), col("gh"))
           .agg(min(col("rep")).as("rep"), min(col("nfp")).as("nfp"))
           .select(col("tid"), col("rep"), col("nfp"), col("gh"))
     } else
-      mergeStoredFps(spark.read.parquet(s"$indexDir/fps.parquet"))
+      mergeStoredFps(fps)
         .join(survivingReps(spark, indexDir), "tid")
         .select(col("tid"), col("rep"), col("nfp"), col("gh"))
+  }
 
   /** The match report, computed from index files only — same scoring
     * pipeline as the inline lane ([[WinnowOps.matchesFrom]]), so the two

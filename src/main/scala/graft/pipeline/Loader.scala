@@ -4,6 +4,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.slf4j.LoggerFactory
 
+import graft.TaskPool
 import graft.check.ReconciliationCheck
 import graft.combine.TableCombiner
 import graft.discover.{Slug, SourceScanner}
@@ -81,23 +82,10 @@ class Loader(
     try body finally spark.sparkContext.setJobDescription(null)
   }
 
-  /** Run `tasks` with at most `config.maxParallel` in flight (≙ the
-    * reference's run_simultaneously cap, exec.py:65-69) — concurrent
-    * Spark actions are scheduled fairly across the cluster; job
-    * descriptions are thread-local so labels stay correct. */
+  /** Run `tasks` with at most `config.maxParallel` in flight
+    * ([[graft.TaskPool]]). */
   private def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(config.maxParallel, tasks.size)))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            tasks.map(t => scala.concurrent.Future(t()))),
-          scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    TaskPool.inParallel(spark.sparkContext, config.maxParallel)(tasks)
 
   def load(): LoadResult = {
     // Step 0: pre-load hooks

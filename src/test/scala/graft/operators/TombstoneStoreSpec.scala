@@ -97,6 +97,24 @@ class TombstoneStoreSpec extends AnyFunSuite {
       assert(f.served(idx) === want)
     }
 
+  for (f <- families)
+    test(s"${f.name}: between the crash and the replay, reads serve the " +
+        "pre-append store and fsck reports the residue; the replay clears it") {
+      val idx = tmp(s"graft-tsresidue-${f.name}") + "/idx"
+      f.build(docs(1L, 2L), idx)
+      val before = f.served(idx)
+      f.append(idx, docs(3L, 4L))
+      assert(f.served(idx) !== before)
+      val ledger = new org.apache.hadoop.fs.Path(s"$idx/docs.parquet/epoch=1")
+      ledger.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ledger, true)
+      assert(f.served(idx) === before)
+      val orphans = IndexFsck.fsck(spark, idx).filter(_.check == "table_orphans")
+      assert(orphans.map(_.status) === Seq("warn"))
+      for (t <- f.tables) assert(orphans.head.detail.contains(s"$t/epoch=1"))
+      f.append(idx, docs(3L, 4L))
+      assert(!IndexFsck.fsck(spark, idx).exists(_.check == "table_orphans"))
+    }
+
   test("EvalIndex: a build batch carrying a doc twice serves no duplicate " +
       "docShingles rows (the single-epoch read holds by construction)") {
     val dir = tmp("graft-evaldup") + "/idx"

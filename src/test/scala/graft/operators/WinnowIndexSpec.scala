@@ -267,6 +267,20 @@ class WinnowIndexSpec extends AnyFunSuite {
     // the at-least-once replay (the stream's resident anti-join re-offers
     // the batch: its docs never committed) — must NOT be refused
     WinnowIndex.appendToIndex(spark, crashed, docsDf(Seq(straddleOld, straddleNew)))
+    // the replay reconciles the residue and rewrites epoch=1, so build the
+    // layout an OLDER replay left by hand: it numbered past the orphan,
+    // landing the batch as epoch=2 in every table and leaving fps epoch=1
+    // without its members twin
+    val cfs = new org.apache.hadoop.fs.Path(crashed).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    for (t <- Seq("members", "docs"))
+      assert(cfs.rename(new org.apache.hadoop.fs.Path(s"$crashed/$t.parquet/epoch=1"),
+        new org.apache.hadoop.fs.Path(s"$crashed/$t.parquet/epoch=2")))
+    org.apache.hadoop.fs.FileUtil.copy(cfs,
+      new org.apache.hadoop.fs.Path(s"$crashed/fps.parquet/epoch=1"), cfs,
+      new org.apache.hadoop.fs.Path(s"$crashed/fps.parquet/epoch=2"), false,
+      spark.sparkContext.hadoopConfiguration)
+    assert(WinnowIndex.membersTwinStatus(spark, crashed) === (("crash_window", Seq(1))))
     // now epoch=1 is a non-tail orphan, but its tids are covered — every
     // mutation path stays open and the compacted store equals a rebuild
     WinnowIndex.compact(spark, crashed)
@@ -275,6 +289,22 @@ class WinnowIndexSpec extends AnyFunSuite {
       docsDf(survivors ++ Seq(straddleOld, straddleNew)), rebuilt)
     assert(collectMatches(WinnowIndex.matchesFromIndex(spark, crashed))
       === collectMatches(WinnowIndex.matchesFromIndex(spark, rebuilt)))
+  }
+
+  test("residentTids skips a batch whose ledger rename was lost, so its " +
+      "replay through the match stream is not dropped as known text") {
+    val dir = tmpDir("graft-winnow-tids") + "/idx"
+    WinnowIndex.buildIndex(spark, docsDf(Seq(straddleOld)), dir)
+    val before = WinnowIndex.residentTids(spark, dir).collect().toSet
+    WinnowIndex.appendToIndex(spark, dir, docsDf(Seq(straddleNew)))
+    val ledger = new org.apache.hadoop.fs.Path(s"$dir/docs.parquet/epoch=1")
+    ledger.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ledger, true)
+    assert(WinnowIndex.residentTids(spark, dir).collect().toSet === before)
+    val matchesDir = tmpDir("graft-winnow-tids-m") + "/matches"
+    graft.streaming.DocStream.processWinnowMatchBatch(
+      spark, dir, matchesDir, docsDf(Seq(straddleNew)))
+    assert(collectMatches(spark.read.parquet(matchesDir)).map(m => (m._1, m._2)) ===
+      Set((300L, 301L)))
   }
 
   test("q_winnow_matches_indexed ≡ inline q_winnow_matches on a parquet corpus") {
