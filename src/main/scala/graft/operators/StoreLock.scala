@@ -8,6 +8,7 @@ import java.util.concurrent.locks.ReentrantLock
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.slf4j.LoggerFactory
 
 /** Per-store serialization of EVERY store writer — appends, builds,
   * compacts, retrains, deletions ([[Tombstones.delete]],
@@ -50,6 +51,7 @@ import org.apache.spark.sql.SparkSession
   * SAME authority (host + pid-namespace match).
   */
 private[graft] object StoreLock {
+  private val log = LoggerFactory.getLogger(getClass)
 
   /** A second writer refused on a FRESH foreign lease — its own type so
     * callers that can legitimately wait out a short hold (the audit
@@ -384,8 +386,8 @@ private[graft] object StoreLock {
       // epochs; the applyWithSwap staged-dels re-check stays as the
       // count-store backstop. Surface it loudly too.
       hold.lost.set(true)
-      System.err.println(
-        s"[storelock] WARNING: lease on $store lost to $other " +
+      log.error(
+        s"lease on $store lost to $other " +
           "mid-hold — single-writer contract violated by a takeover " +
           "race or operator action; this writer's publishes are now " +
           "fenced and will fail loudly")

@@ -180,12 +180,16 @@ object WinnowOps {
       .agg(sort_array(collect_list(struct(col("rep"), col("nfp")))).as("xs"))
       .filter(size(col("xs")) >= 2)
       // sorted positional enumeration: each unordered pair generated
-      // exactly once with ra < rb by construction (reps are distinct per
-      // text), instead of materializing all n² structs and filtering half
+      // exactly once from strictly-later positions, instead of
+      // materializing all n² structs and filtering half. Sorted ⇒
+      // ra ≤ rb; a rep posted twice on one gram yields adjacent equal
+      // reps, and the ra <> rb filter drops those self-pairs (the
+      // DedupOps t1 <> t2 guard)
       .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> " +
+        "filter(flatten(transform(xs, (a, i) -> " +
           "transform(slice(xs, i + 2, size(xs) - i - 1), b -> " +
-          "struct(a.rep AS ra, a.nfp AS na, b.rep AS rb, b.nfp AS nb))))")).as("p"))
+          "struct(a.rep AS ra, a.nfp AS na, b.rep AS rb, b.nfp AS nb)))), " +
+          "p -> p.ra <> p.rb)")).as("p"))
       .groupBy(col("p.ra").as("doc_a"), col("p.rb").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"),
         first(col("p.na")).as("na"), first(col("p.nb")).as("nb"))

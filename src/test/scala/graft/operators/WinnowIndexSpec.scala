@@ -319,4 +319,15 @@ class WinnowIndexSpec extends AnyFunSuite {
     assert(indexed === inline)
     assert(inline.nonEmpty)
   }
+
+  test("pair enumeration emits no self-pair when one (gh, rep) posting is duplicated") {
+    // rep 7 is posted twice on both grams: sorted, its two copies are
+    // adjacent, and without the ra <> rb guard they pair with each other
+    val capped = Seq((1L, 7L, 5L), (1L, 7L, 5L), (1L, 8L, 5L),
+      (2L, 7L, 5L), (2L, 7L, 5L), (2L, 8L, 5L)).toDF("gh", "rep", "nfp")
+    val pairs = WinnowOps.pairsFrom(capped).collect()
+      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
+    assert(pairs.forall { case (a, b) => a != b }, pairs.mkString(", "))
+    assert(pairs.toSet === Set((7L, 8L)))
+  }
 }
