@@ -1,5 +1,6 @@
 package graft.check
 
+import java.net.URI
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,12 +66,18 @@ object ReconciliationCheck {
       tables: Map[String, DataFrame],
       tolerance: Long = DefaultTolerance): Report = {
     val counts = fusedCounts(spark, groups.values.flatten.toSeq, tables)
+    val lines = counts.files.map { case (file, n) => fileKey(file) -> n }
     val csvByTable = groups.map { case (name, members) =>
-      name -> members.map(f => counts.files.getOrElse(f.toUri.toString,
-        counts.files.getOrElse(f.toString, 0L))).sum
+      name -> members.map(f => lines.getOrElse(fileKey(f.toUri.toString), 0L)).sum
     }
     check(csvByTable, groups.keys.map(n => n -> counts.tables.getOrElse(n, 0L)).toMap, tolerance)
   }
+
+  /** The decoded path a file URI names, so both spellings of one file
+    * meet: `input_file_name()` percent-encodes ASCII specials but leaves
+    * non-ASCII characters raw (`t%20é.csv`), while `Path.toUri` encodes
+    * them as UTF-8 bytes (`t%20%C3%A9.csv`). */
+  def fileKey(uri: String): String = new URI(uri).getPath
 
   /** Precise mode (S8, reference csvcount.py:13-23): count CSV *records*
     * (a quoted field may span lines) rather than raw lines. multiLine

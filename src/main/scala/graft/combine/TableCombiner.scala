@@ -18,7 +18,13 @@ import org.slf4j.LoggerFactory
   *    the combine with a warning (main.py:222-226).
   *
   * Catalyst flattens the n-ary union (CombineUnions) so 1000 sibling files
-  * become one scan stage, not a 1000-deep binary tree.
+  * become one scan stage, not a 1000-deep binary tree — but still one file
+  * scan per member. So `Loader` no longer unions positional siblings that
+  * share an encoding and arity: it reads them as one multi-file relation
+  * (`CsvTableReader.scan`). The union here serves `combineByName` groups
+  * and groups with mixed encodings, and applies the arity and
+  * stem-collision rules above to every group the loader does not read in
+  * one scan.
   */
 object TableCombiner {
   private val log = LoggerFactory.getLogger(getClass)

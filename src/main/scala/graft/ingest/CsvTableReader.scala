@@ -29,6 +29,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * files, the first one is the header authority (Spark's own inference
   * would take the first line of the largest file).
   *
+  * `plan` sniffs one file into a [[CsvSource]] (encoding and header schema,
+  * one open stream); `scan` reads any files under a planned source, so a
+  * caller that reads a file alone and again within a group sniffs it once.
+  *
   * The read itself is one distributed, splittable `FileSourceScanExec` per
   * table group — Spark parallelizes by HDFS-style splits, so a single huge
   * CSV still fans out across executors.
@@ -37,24 +41,40 @@ object CsvTableReader {
 
   private val SampleBytes = 8192
 
+  /** One sniffed CSV file: the encoding its sample decodes in and the
+    * all-text schema of its header line (empty for an empty file). */
+  final case class CsvSource(encoding: String, schema: StructType)
+
   def read(spark: SparkSession, files: Seq[Path]): DataFrame = {
     require(files.nonEmpty, "no csv files for table")
-    val (encoding, header) = sniff(files.head)
-    val options = Map(
-      "header" -> "true",
-      "inferSchema" -> "false",
-      "encoding" -> encoding,
-      // pgfutter/pg COPY semantics: an unquoted empty field is NULL, a
-      // quoted "" stays '' (mapping it to NULL is a post-load concern,
-      // strip()). NUL as the null token does both, and unlike a null token
-      // it leaves an empty header cell a string, which Spark's header
-      // check needs; a Postgres text value cannot hold NUL anyway
-      "nullValue" -> "\u0000")
-    val df = spark.read.options(options)
-      .schema(headerSchema(spark, options, header))
+    scan(spark, plan(spark, files.head), files)
+  }
+
+  /** Sniff `file` on the driver: its encoding and header schema. */
+  def plan(spark: SparkSession, file: Path): CsvSource = {
+    val (encoding, header) = sniff(file)
+    CsvSource(encoding, headerSchema(spark, options(encoding), header))
+  }
+
+  /** Read `files` as one relation in `authority`'s encoding, named by its
+    * header. Starts no Spark job. */
+  def scan(spark: SparkSession, authority: CsvSource, files: Seq[Path]): DataFrame = {
+    val df = spark.read.options(options(authority.encoding))
+      .schema(authority.schema)
       .csv(files.map(_.toString): _*)
     df.toDF(df.columns.map(sanitize).toIndexedSeq: _*)
   }
+
+  private def options(encoding: String) = Map(
+    "header" -> "true",
+    "inferSchema" -> "false",
+    "encoding" -> encoding,
+    // pgfutter/pg COPY semantics: an unquoted empty field is NULL, a
+    // quoted "" stays '' (mapping it to NULL is a post-load concern,
+    // strip()). NUL as the null token does both, and unlike a null token
+    // it leaves an empty header cell a string, which Spark's header
+    // check needs; a Postgres text value cannot hold NUL anyway
+    "nullValue" -> "\u0000")
 
   /** The all-text schema Spark's CSV source infers from `header` under
     * `options`: its parser settings split the line and `makeSafeHeader`
@@ -102,13 +122,17 @@ object CsvTableReader {
     } finally in.close()
   }
 
+  /** A sample shorter than `SampleBytes` is the whole file; a full one may
+    * end inside a multi-byte character, so its decode is not told the
+    * input ended and a cut trailing sequence is not malformed. */
   private def encodingOf(sample: Array[Byte]): String =
     if (sample.length >= 3 && sample(0) == 0xEF.toByte && sample(1) == 0xBB.toByte && sample(2) == 0xBF.toByte) "UTF-8"
     else if (sample.length >= 2 && sample(0) == 0xFF.toByte && sample(1) == 0xFE.toByte) "UTF-16LE"
     else if (sample.length >= 2 && sample(0) == 0xFE.toByte && sample(1) == 0xFF.toByte) "UTF-16BE"
     else {
-      val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-      try { dec.decode(java.nio.ByteBuffer.wrap(sample)); "UTF-8" }
-      catch { case _: java.nio.charset.CharacterCodingException => "ISO-8859-1" }
+      val decoded = java.nio.charset.StandardCharsets.UTF_8.newDecoder().decode(
+        java.nio.ByteBuffer.wrap(sample), java.nio.CharBuffer.allocate(sample.length),
+        sample.length < SampleBytes)
+      if (decoded.isError) "ISO-8859-1" else "UTF-8"
     }
 }

@@ -11,6 +11,7 @@ import graft.discover.{Slug, SourceScanner}
 import graft.functions.Functions
 import graft.hooks.{PgFunctions, SqlHookRunner}
 import graft.ingest.{CsvTableReader, Unzipper}
+import graft.ingest.CsvTableReader.CsvSource
 
 /** The six-stage pipeline (SURVEY §0 / §3.1), Spark-native:
   *
@@ -26,6 +27,18 @@ import graft.ingest.{CsvTableReader, Unzipper}
   * combined table under the slugified prefix (reference asymmetry,
   * SURVEY §1.2). The sink is pluggable: temp views always; `sink`
   * callback (e.g. PostgresSink.write or a parquet writer) per table.
+  *
+  * A positional combine reads its siblings as ONE multi-file CSV relation
+  * (`CsvTableReader.scan`, the first member's header naming the columns),
+  * so every later reader of the combined table — its sink, the hooks, the
+  * check — scans the group once rather than once per member. This needs
+  * every member to sniff to the same encoding and header arity (one read
+  * takes one encoding, and a positional union of equal arities reads the
+  * same rows). Everything else goes through `TableCombiner.combineGrouped`
+  * unchanged: `combineByName` groups, mixed encodings, mismatched arities
+  * (which fail there) and a combined name equal to a member stem (warned
+  * and skipped there). Each file is sniffed once per load; that sniff
+  * serves its own read and its group's.
   *
   * Spark jobs run only where the work is: planning the per-file reads
   * and the combines runs none (CsvTableReader derives headers on the
@@ -110,11 +123,19 @@ class Loader(
     val csvs = SourceScanner.discoverCsvs(spark, config.sources, config.excludeRegex)
     val groups = SourceScanner.groupByTable(csvs)
     if (!config.disableImport) {
-      // one all-text DataFrame per file, registered by raw stem (driver
-      // only — cheap); the sink ACTIONS run as parallel Spark jobs
-      for (f <- csvs) {
+      // one all-text DataFrame per file: each file sniffed once and its
+      // read planned concurrently (driver only, no jobs), then registered
+      // by raw stem here in file order; the sink ACTIONS run as parallel
+      // Spark jobs
+      val sources = new Array[CsvSource](csvs.size)
+      val reads = new Array[DataFrame](csvs.size)
+      inParallel(csvs.indices.map(i => () => {
+        sources(i) = CsvTableReader.plan(spark, csvs(i))
+        reads(i) = CsvTableReader.scan(spark, sources(i), Seq(csvs(i)))
+      }))
+      val sourceOf = csvs.zip(sources).toMap
+      for ((f, df) <- csvs.zip(reads)) {
         val stem = Slug.rawStem(f)
-        val df = CsvTableReader.read(spark, Seq(f))
         df.createOrReplaceTempView(stem)
         tables += stem -> df
       }
@@ -134,8 +155,12 @@ class Loader(
       if (config.combineTables) {
         for ((name, members) <- groups) {
           val stems = members.map(Slug.rawStem)
-          TableCombiner.combineGrouped(name, stems,
-              members.map(s => tables(Slug.rawStem(s))), config.combineByName)
+          val memberSources = members.map(sourceOf)
+          val oneScan = !config.combineByName && !stems.contains(name) &&
+            memberSources.map(s => (s.encoding, s.schema.length)).distinct.size == 1
+          (if (oneScan) Some(CsvTableReader.scan(spark, memberSources.head, members))
+           else TableCombiner.combineGrouped(name, stems,
+              members.map(s => tables(Slug.rawStem(s))), config.combineByName))
             .foreach { df =>
               df.createOrReplaceTempView(name)
               combined += name -> df

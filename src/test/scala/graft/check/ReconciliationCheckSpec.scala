@@ -77,6 +77,24 @@ class ReconciliationCheckSpec extends AnyFunSuite {
     assert(loadJobs === 0)
   }
 
+  test("file keys: input_file_name's raw non-ASCII and Path.toUri's escapes meet") {
+    // input_file_name() leaves non-ASCII characters raw, Path.toUri encodes
+    // them as UTF-8 bytes; this JVM's path encoding cannot create such a
+    // file, so the two spellings are written out
+    val raw = "file:///tmp/dir%20\u00fc%25x/t%20\u00e9.csv"
+    val nio = "file:///tmp/dir%20%C3%BC%25x/t%20%C3%A9.csv"
+    assert(ReconciliationCheck.fileKey(raw) === "/tmp/dir \u00fc%x/t \u00e9.csv")
+    assert(ReconciliationCheck.fileKey(nio) === ReconciliationCheck.fileKey(raw))
+  }
+
+  test("reconcile matches files whose path needs escaping") {
+    val dir = Files.createDirectories(Files.createTempDirectory("rec").resolve("a dir%x"))
+    Files.write(dir.resolve("animals 1.csv"), "name\nGrizzly\nGiraffe\n".getBytes)
+    val csvs = SourceScanner.discoverCsvs(Seq(dir))
+    val report = ReconciliationCheck.reconcile(spark, SourceScanner.groupByTable(csvs), Map.empty)
+    assert(report.tables.map(t => t.table -> t.csvCount) === Seq("animals" -> 3L))
+  }
+
   test("delta ledger and fatal threshold") {
     val r = ReconciliationCheck.check(
       Map("a" -> 100L, "b" -> 200L),

@@ -8,6 +8,22 @@ import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
+/** Header edge cases: each file's header line, as Spark's CSV source
+  * would infer it, in the encoding the sniff detects. */
+object IngestSpec {
+  val HeaderCorpus: Seq[(String, Array[Byte])] = Seq(
+    "bom" -> (Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
+      "Id,Name\n1,a\n2,b\n".getBytes("UTF-8")),
+    "crlf" -> "id,name\r\n1,a\r\n2,b\r\n".getBytes("UTF-8"),
+    "blank_lead" -> "\n  \n\nid,name\n1,a\n".getBytes("UTF-8"),
+    "quoted" -> "\"a,b\",\"say \"\"hi\"\"\",c\n1,\"x,y\",3\n".getBytes("UTF-8"),
+    "empty_cell" -> "a,,c\n1,2,3\n".getBytes("UTF-8"),
+    "dup_case" -> "Name,name,NAME,x\n1,2,3,4\n".getBytes("UTF-8"),
+    "latin1" -> "café,größe\nthé,1\n".getBytes("ISO-8859-1"),
+    "header_only" -> "a,b\n".getBytes("UTF-8"),
+    "empty" -> Array.empty[Byte])
+}
+
 class IngestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -61,20 +77,9 @@ class IngestSpec extends AnyFunSuite {
 
   test("driver-side header: columns and rows match Spark's own header inference, no jobs") {
     val dir = Files.createTempDirectory("hdr")
-    val corpus = Seq(
-      "bom" -> (Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
-        "Id,Name\n1,a\n2,b\n".getBytes("UTF-8")),
-      "crlf" -> "id,name\r\n1,a\r\n2,b\r\n".getBytes("UTF-8"),
-      "blank_lead" -> "\n  \n\nid,name\n1,a\n".getBytes("UTF-8"),
-      "quoted" -> "\"a,b\",\"say \"\"hi\"\"\",c\n1,\"x,y\",3\n".getBytes("UTF-8"),
-      "empty_cell" -> "a,,c\n1,2,3\n".getBytes("UTF-8"),
-      "dup_case" -> "Name,name,NAME,x\n1,2,3,4\n".getBytes("UTF-8"),
-      "latin1" -> "café,größe\nthé,1\n".getBytes("ISO-8859-1"),
-      "header_only" -> "a,b\n".getBytes("UTF-8"),
-      "empty" -> Array.empty[Byte])
     def rows(df: DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("\u0001"))
-    for ((name, bytes) <- corpus) {
+    for ((name, bytes) <- IngestSpec.HeaderCorpus) {
       val f = dir.resolve(s"$name.csv")
       Files.write(f, bytes)
       val (df, jobs) = JobCounter(spark.sparkContext)(CsvTableReader.read(spark, Seq(f)))
@@ -158,5 +163,20 @@ class IngestSpec extends AnyFunSuite {
     val latin = dir.resolve("latin.csv")
     Files.write(latin, "café".getBytes("ISO-8859-1"))
     assert(CsvTableReader.detectEncoding(latin) === "ISO-8859-1")
+  }
+
+  test("encoding detection: a UTF-8 character cut by the sample's end is still UTF-8") {
+    val f = Files.createTempDirectory("enc_cut").resolve("cut.csv")
+    // the 8,192-byte sample ends after the first byte of 'é'
+    val value = "x" * (8191 - "txt\n".length) + "é"
+    Files.write(f, s"txt\n$value\n".getBytes("UTF-8"))
+    assert(CsvTableReader.detectEncoding(f) === "UTF-8")
+    val rows = CsvTableReader.read(spark, Seq(f)).collect().map(_.getString(0))
+    assert(rows.length === 1)
+    assert(rows.head.getBytes("UTF-8").sameElements(value.getBytes("UTF-8")))
+    // a sample that is the whole file and ends mid-character is not UTF-8
+    val short = f.resolveSibling("short.csv")
+    Files.write(short, "txt\n".getBytes("UTF-8") ++ "é".getBytes("UTF-8").take(1))
+    assert(CsvTableReader.detectEncoding(short) === "ISO-8859-1")
   }
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.JobCounter
+import org.apache.spark.{JobCounter, ScanCounter}
 import graft.SparkTestSession
 import graft.check.ReconciliationCheck
 import graft.cli.Main
@@ -180,6 +180,30 @@ class LoaderSpec extends AnyFunSuite {
       new Loader(spark, LoaderConfig(sources = Seq(dir), combineTables = true)).load())
     assert(result.report.get.totalDelta === 2L)
     assert(loadJobs <= 2, s"load started $loadJobs jobs")
+  }
+
+  test("scan budget: one file scan per combined table for each reader") {
+    // 2 tables x 3 months, combined, with a sink, a post-load hook over
+    // one combined table, and the check
+    val dir = Files.createTempDirectory("scans")
+    for (t <- Seq("a", "b"); m <- 1 to 3)
+      Files.write(dir.resolve(s"${t}_$m.csv"), s"k,v\n$t$m,1\n$t$m,2\n".getBytes)
+    val hook = Files.createTempFile("post", ".sql")
+    Files.write(hook, "SELECT k, count(*) FROM a GROUP BY k;".getBytes)
+    val cfg = LoaderConfig(sources = Seq(dir), combineTables = true, postLoad = Seq(hook))
+    def load() = new Loader(spark, cfg, sink = (_, df) => df.count()).load()
+
+    val (result, scans) = ScanCounter(spark.sparkContext)(load())
+    assert(result.combined.keySet === Set("a", "b"))
+    assert(result.report.get.totalDelta === 6L)
+    // per-file sinks 6; each combined table once in its sink and once in
+    // the check; the hook once; the check's text scan over all 6 files
+    assert(scans === Map("Scan csv" -> (6 + 2 * 2 + 1), "Scan text" -> 1))
+
+    // the same load read each combined table as a union of its members'
+    // reads in 20 jobs; one scan per group must not add any
+    val (_, jobs) = JobCounter(spark.sparkContext)(load())
+    assert(jobs <= 20, s"load started $jobs jobs")
   }
 
   test("cli parse: full flag surface") {
